@@ -6,8 +6,8 @@ contract is provided over plain parquet behind this thin abstraction
 (SURVEY.md §7.4 item 5): every crawl round appends ``<table>/round=<r>/``
 directories, and a single JSON manifest records which rounds are COMMITTED.
 A kill between writes leaves uncommitted directories that are ignored on
-resume — the manifest is the commit point, written atomically via
-write-temp + ``os.replace``.
+resume — the manifest is the commit point, written atomically and durably
+via write-temp + fsync + ``os.replace`` + directory fsync.
 
 At cluster scale the only change is swapping this class for
 ``df.writeTo(table).append()`` on an Iceberg catalog; the engine code only
@@ -41,7 +41,17 @@ class Catalog:
         tmp = self._manifest_path.with_suffix(".tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
+            # the new contents must be on disk before the rename publishes
+            # them: otherwise a power loss can leave an empty manifest
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path)  # atomic commit point
+        # make the rename itself durable
+        dir_fd = os.open(self.root, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
 
     # -- round-partitioned appends ----------------------------------------
     def round_path(self, table: str, round_no: int) -> str:

@@ -43,11 +43,11 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import Catalog
 from .errors import failure_reason_col, should_retry_col
-from .kernel.canonical import host_of
 from .politeness import (
     apply_host_budget,
     path_filter_cond,
@@ -58,6 +58,7 @@ from .seen import (
     DRIVER_MERGE_MAX_BYTES,
     SEGMENT_SCHEMA,
     exact_antijoin,
+    filter_family,
     segments_to_driver,
 )
 from .udfs import make_extract_udf
@@ -67,23 +68,13 @@ FRONTIER_COLS = ["job_id", "url", "url_hash", "host", "origin", "path",
 FRONTIER_SCHEMA = ("job_id string, url string, url_hash string, host string, "
                    "origin string, path string, depth int, seq long, "
                    "round_added int, attempt int")
-
-# Frontier size above which budget_salt_n="auto" enables the two-stage
-# salted per-host top-k. Measured crossover (BENCH.md round-5 skew probes):
-# at ~10k rows/round salting is a 1.09x LOSS even with 92% of the frontier
-# on one host; at 2M rows it is a 1.43x win (1.85x -> 1.29x). 500k sits
-# safely above the loss regime and below the win regime.
-SALT_FRONTIER_THRESHOLD = 500_000
-
-
-def resolve_salt_n(configured: int | str, known_pending: int | None) -> int:
-    """The budget_salt_n='auto' gate: salt (n=8) only when the round's
-    frontier is known to exceed SALT_FRONTIER_THRESHOLD. Admission rows
-    are salt-invariant (politeness.apply_host_budget), so this choice can
-    never change crawl results — only the physical plan."""
-    if configured != "auto":
-        return configured
-    return 8 if (known_pending or 0) >= SALT_FRONTIER_THRESHOLD else 0
+FRONTIER_PA_SCHEMA = pa.schema([
+    ("job_id", pa.string()), ("url", pa.string()),
+    ("url_hash", pa.string()), ("host", pa.string()),
+    ("origin", pa.string()), ("path", pa.string()),
+    ("depth", pa.int32()), ("seq", pa.int64()),
+    ("round_added", pa.int32()), ("attempt", pa.int32()),
+])
 
 
 @dataclass
@@ -103,10 +94,8 @@ class CrawlConfig:
     politeness_budget: int = 0           # fetches per budget key per round; 0 = unlimited
     budget_scope: str = "host"           # 'host' or 'domain' (registrable) —
                                          # north rule: per-DOMAIN politeness
-    budget_salt_n: int | str = "auto"    # >1: two-stage salted per-host top-k (hot
-                                         # hosts); 0: plain window; "auto": salt only
-                                         # when the round's frontier exceeds
-                                         # SALT_FRONTIER_THRESHOLD (measured: salting
+    budget_salt_n: int = 0               # >1: two-stage salted per-host top-k (hot
+                                         # hosts); 0: plain window (measured: salting
                                          # loses below ~10k rows/round — SCALING.json
                                          # skew_probe_bfs — and wins at 2M — skew_probe)
     max_attempts: int = 1                # fetch retries (Queue.ts:84-89 attempts=3)
@@ -134,11 +123,6 @@ class CrawlConfig:
                                          # or custom URL); results carry the
                                          # RESOLVED mode name like Base.ts:1295
                                          # ('base' when unset / auto)
-    fetch_semi_max: int = 1_000_000      # semi-reduce the corpus side of the
-                                         # fetch join with a broadcast of the
-                                         # admitted key set when the frontier
-                                         # round is at most this many rows;
-                                         # 0 disables (always shuffle join)
     prefilter_min_seen: int = 25_000     # engage the bloom/cuckoo PROBE only
                                          # once the seen set exceeds this many
                                          # hashes; below it the exact anti-join
@@ -172,22 +156,23 @@ class CrawlConfig:
             raise ValueError("politeness_budget/batch_size must be >= 0")
         if self.max_attempts < 1:
             raise ValueError("max_attempts must be >= 1")
-        if isinstance(self.budget_salt_n, str):
-            if self.budget_salt_n != "auto":
-                raise ValueError(f"budget_salt_n must be an int >= 0 or "
-                                 f"'auto', got {self.budget_salt_n!r}")
-        elif self.budget_salt_n < 0:
-            raise ValueError("budget_salt_n must be >= 0")
+        if not isinstance(self.budget_salt_n, int) or self.budget_salt_n < 0:
+            raise ValueError(f"budget_salt_n must be an int >= 0, "
+                             f"got {self.budget_salt_n!r}")
         if self.seen_filter not in ("bloom", "cuckoo"):
             raise ValueError(f"unknown seen_filter {self.seen_filter!r}")
         from anycrawl_spark.cuckoo import check_n_slots
 
         check_n_slots(self.cuckoo_n_slots)
+        # the seen filter lives on the driver (limit caps it at 50k hashes)
+        nbytes = self.filter_family().total_bytes
+        if nbytes > DRIVER_MERGE_MAX_BYTES:
+            raise ValueError(f"seen-filter geometry needs {nbytes} bytes, "
+                             f"above the {DRIVER_MERGE_MAX_BYTES}-byte "
+                             f"driver-resident bound")
 
     def filter_family(self):
         """The configured seen-filter family with geometry bound."""
-        from anycrawl_spark.seen import filter_family
-
         return filter_family(
             self.seen_filter, num_buckets=self.bloom_num_buckets,
             m_bits=self.bloom_m_bits, k=self.bloom_k,
@@ -302,9 +287,9 @@ class CrawlEngine:
             self.corpus = self.corpus.localCheckpoint(eager=False)
         self.catalog = Catalog(checkpoint_dir)
         self.robots = robots
-        # driver-resident cumulative bloom segments (small-filter fast path;
-        # see seen.DRIVER_MERGE_MAX_BYTES). _bloom_mem_round = the round the
-        # cache is cumulative through; invalidated on resume (fresh engine).
+        # driver-resident cumulative seen-filter segments (CrawlConfig bounds
+        # the geometry by seen.DRIVER_MERGE_MAX_BYTES). _bloom_mem_round = the
+        # round the cache is cumulative through; invalidated on resume.
         self._bloom_mem: dict[int, bytes] | None = None
         self._bloom_mem_round = -1
         # -- write pipelining (see _finalize_prev) --------------------------
@@ -321,7 +306,6 @@ class CrawlEngine:
         self._graveyard: list = []      # caches from two rounds back
         self._pending_mem: DataFrame | None = None
         self._seen_uncommitted: list[tuple[int, str, bool]] = []
-        self._bloom_uncommitted: tuple[int, str] | None = None
         self._writes: ThreadPoolExecutor | None = None
 
     # -- state helpers ------------------------------------------------------
@@ -333,23 +317,16 @@ class CrawlEngine:
 
     def _latest_bloom(self, spark: SparkSession,
                       up_to_round: int) -> DataFrame | None:
-        """Newest bloom round ≤ ``up_to_round`` — committed, or the round
-        whose write this run completed synchronously but whose manifest
-        commit is still deferred (write pipelining). Bloom checkpoints are
-        cumulative (each round's write is the OR-merge of its delta with
+        """Newest committed bloom round ≤ ``up_to_round``. Bloom checkpoints
+        are cumulative (each round's write is the OR-merge of its delta with
         the prior checkpoint), so the newest round alone IS the seen filter —
-        no per-round history re-merge."""
+        no per-round history re-merge. Rounds whose commit is still deferred
+        are never read here: the driver-resident copy already holds them."""
         rounds = [rr for rr in self.catalog.committed_rounds("bloom")
                   if rr <= up_to_round]
-        best = max(rounds) if rounds else None
-        if (self._bloom_uncommitted is not None
-                and self._bloom_uncommitted[0] <= up_to_round
-                and (best is None or self._bloom_uncommitted[0] > best)):
-            return spark.read.schema(SEGMENT_SCHEMA).parquet(
-                self._bloom_uncommitted[1])
-        if best is None:
+        if not rounds:
             return None
-        return self.catalog.read_round(spark, "bloom", best,
+        return self.catalog.read_round(spark, "bloom", max(rounds),
                                        schema=SEGMENT_SCHEMA)
 
     def _read_seen(self, spark: SparkSession,
@@ -396,10 +373,6 @@ class CrawlEngine:
                 self._seen_uncommitted = [
                     (rr, p, comp) for rr, p, comp in self._seen_uncommitted
                     if rr not in committed_seen]
-                if (self._bloom_uncommitted is not None
-                        and self._bloom_uncommitted[0]
-                        in self.catalog.committed_rounds("bloom")):
-                    self._bloom_uncommitted = None
             except BaseException:
                 # a failed write/commit aborts the run — release EVERY
                 # cached frame (this round's, the deferred tail's, and the
@@ -490,10 +463,13 @@ class CrawlEngine:
                 rows.append(row)
         return rows
 
+    def _write_seen_driver(self, hashes: list[str], round_no: int) -> None:
+        self.catalog.append_round_local(
+            pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
+            "seen", round_no)
+
     def _write_filter_driver(self, cache: dict[int, bytes],
                              round_no: int) -> None:
-        import pyarrow as pa
-
         self.catalog.append_round_local(
             pa.table({
                 "bucket": pa.array(sorted(cache), type=pa.int32()),
@@ -508,8 +484,9 @@ class CrawlEngine:
         (fam.delete_driver; one copy per distinct key makes it
         collision-safe), bloom or a saturated cuckoo segment via a full
         rebuild from the compacted exact seen (the same rebuild-from-
-        history remedy resume applies to corrupt segments). One commit,
-        replace=['seen','bloom']."""
+        history remedy the round loop applies to corrupt segments). Both
+        run on the driver: the seen set is bounded by the job's limit.
+        One commit, replace=['seen','bloom']."""
         spark = self.spark
         progress = self._progress()
         if progress["round"] < 0:
@@ -526,23 +503,19 @@ class CrawlEngine:
         seen = self._read_seen(spark, progress["round"])
         if seen is None:
             raise ValueError("no seen state committed yet")
-        requested = [row["url_hash"] for row in self._canonical_rows(cfg,
-                                                                     urls)]
-        evict_df = spark.createDataFrame([(h,) for h in requested],
-                                         "url_hash string")
+        requested = {row["url_hash"]
+                     for row in self._canonical_rows(cfg, urls)}
+        seen_hashes = [row["url_hash"] for row in seen.collect()]
         # Evict only hashes actually IN the seen set: cuckoo deletion is
         # defined only for tracked insertions — deleting a never-inserted
         # hash could zero a colliding member's only fingerprint copy and
         # break the no-false-negative contract (cuckoo.py _delete).
-        hashes = sorted(row["url_hash"] for row in seen.join(
-            F.broadcast(evict_df), "url_hash", "left_semi")
-            .select("url_hash").distinct().collect())
-        remaining = seen.join(F.broadcast(evict_df), "url_hash", "left_anti")
-        self.catalog.append_round(remaining, "seen", r)
+        hashes = sorted(requested.intersection(seen_hashes))
+        remaining = [h for h in seen_hashes if h not in requested]
+        self._write_seen_driver(remaining, r)
 
         deleted = False
-        if (fam.delete_driver is not None
-                and fam.total_bytes <= DRIVER_MERGE_MAX_BYTES):
+        if fam.delete_driver is not None:
             prior = self._latest_bloom(spark, progress["round"])
             if prior is not None:
                 cache, skipped = fam.delete_driver(
@@ -551,12 +524,9 @@ class CrawlEngine:
                     self._write_filter_driver(cache, r)
                     deleted = True
         if not deleted:
-            # bloom (no deletion) / saturated segment / oversized filter:
-            # rebuild the cumulative filter from the compacted exact seen
-            self.catalog.append_round(
-                fam.build_segments(
-                    self.catalog.read_round_uncommitted(spark, "seen", r)),
-                "bloom", r)
+            # bloom (no deletion) / saturated segment: rebuild the
+            # cumulative filter from the compacted exact seen
+            self._write_filter_driver(fam.build_driver(remaining), r)
 
         meta = {**progress, "round": r, "finalized": True,
                 "pending_next": 0, "phase": "evicted",
@@ -573,8 +543,6 @@ class CrawlEngine:
         re-inserted — the other half of the cuckoo delete/insert round
         trip. `run(cfg, resume=True)` then fetches them (the admission
         limit still applies: pass a limit above the job's done count)."""
-        import pyarrow as pa
-
         spark = self.spark
         progress = self._progress()
         if progress["round"] < 0:
@@ -587,14 +555,6 @@ class CrawlEngine:
         self._check_geometry(fam)
         rows = self._canonical_rows(cfg, urls)
         base = progress["enqueued"]
-
-        pa_schema = pa.schema([
-            ("job_id", pa.string()), ("url", pa.string()),
-            ("url_hash", pa.string()), ("host", pa.string()),
-            ("origin", pa.string()), ("path", pa.string()),
-            ("depth", pa.int32()), ("seq", pa.int64()),
-            ("round_added", pa.int32()), ("attempt", pa.int32()),
-        ])
         cols = {
             "job_id": [row["job_id"] for row in rows],
             "url": [row["url"] for row in rows],
@@ -607,27 +567,14 @@ class CrawlEngine:
             "round_added": [r] * len(rows),
             "attempt": [1] * len(rows),
         }
-        self.catalog.append_round_local(pa.table(cols, schema=pa_schema),
-                                        "pending", r)
-        hashes = [row["url_hash"] for row in rows]
         self.catalog.append_round_local(
-            pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
-            "seen", r)
-
-        if fam.total_bytes <= DRIVER_MERGE_MAX_BYTES:
-            prior = self._latest_bloom(spark, progress["round"])
-            cache = segments_to_driver(prior) if prior is not None else {}
-            cache = fam.merge_driver(cache, fam.build_driver(hashes))
-            self._write_filter_driver(cache, r)
-        else:
-            # distributed-size filter: cumulative write = prior checkpoint
-            # OR-merged with the delta built from the new pending rows
-            delta = fam.build_segments(
-                self.catalog.read_round_uncommitted(spark, "pending", r))
-            prior = self._latest_bloom(spark, progress["round"])
-            segs = (delta if prior is None
-                    else fam.merge_segments(prior.unionByName(delta)))
-            self.catalog.append_round(segs, "bloom", r)
+            pa.table(cols, schema=FRONTIER_PA_SCHEMA), "pending", r)
+        hashes = [row["url_hash"] for row in rows]
+        self._write_seen_driver(hashes, r)
+        prior = self._latest_bloom(spark, progress["round"])
+        cache = segments_to_driver(prior) if prior is not None else {}
+        self._write_filter_driver(
+            fam.merge_driver(cache, fam.build_driver(hashes)), r)
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
@@ -712,9 +659,7 @@ class CrawlEngine:
                 F.col("error_message"))
         ex["final_attempt"] = final_attempt
         ex["outcome_key"] = final_attempt.alias("final")
-        ex["outcome_aggs"] = [F.count("*").alias("count"),
-                              F.min("seq").alias("min_seq"),
-                              F.max("seq").alias("max_seq")]
+        ex["outcome_aggs"] = [F.count("*").alias("count")]
         ex["metrics_key"] = F.spark_partition_id().alias("partition_id")
         ex["metrics_aggs"] = [
             F.count("*").alias("urls"),
@@ -783,7 +728,6 @@ class CrawlEngine:
         self._graveyard = []
         self._pending_mem = None
         self._seen_uncommitted = []
-        self._bloom_uncommitted = None
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
@@ -819,50 +763,21 @@ class CrawlEngine:
             frontier = self._seed_frontier(cfg)
             if self.robots is not None and cfg.respect_robots:
                 frontier = robots_allowed(frontier, self.robots)
-            if fam.total_bytes <= DRIVER_MERGE_MAX_BYTES:
-                # driver-local seed round: the frontier is one seed row
-                # (already driver-built) — one collect replaces four Spark
-                # jobs (count + pending/seen/bloom writes), shaving ~2 s of
-                # fixed startup from every crawl job. File layout, schema,
-                # and manifest are identical to the distributed path.
-                import pyarrow as pa
-
-                rows = frontier.collect()
-                n_seed = len(rows)
-                pa_schema = pa.schema([
-                    ("job_id", pa.string()), ("url", pa.string()),
-                    ("url_hash", pa.string()), ("host", pa.string()),
-                    ("origin", pa.string()), ("path", pa.string()),
-                    ("depth", pa.int32()), ("seq", pa.int64()),
-                    ("round_added", pa.int32()), ("attempt", pa.int32()),
-                ])
-                self.catalog.append_round_local(
-                    pa.table({c: [r[c] for r in rows]
-                              for c in FRONTIER_COLS}, schema=pa_schema),
-                    "pending", 0)
-                hashes = [r["url_hash"] for r in rows]
-                self.catalog.append_round_local(
-                    pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
-                    "seen", 0)
-                seed_bloom = fam.build_driver(hashes)
-                self.catalog.append_round_local(
-                    pa.table({
-                        "bucket": pa.array(sorted(seed_bloom),
-                                           type=pa.int32()),
-                        "bitmap": pa.array(
-                            [seed_bloom[b] for b in sorted(seed_bloom)],
-                            type=pa.binary()),
-                    }),
-                    "bloom", 0)
-                self._bloom_mem = seed_bloom
-                self._bloom_mem_round = 0
-            else:
-                n_seed = frontier.count()
-                self.catalog.append_round(frontier, "pending", 0)
-                self.catalog.append_round(
-                    frontier.select("url_hash"), "seen", 0)
-                self.catalog.append_round(fam.build_segments(frontier),
-                                          "bloom", 0)
+            # driver-local seed round: the frontier is one seed row
+            # (already driver-built) — one collect replaces four Spark
+            # jobs (count + pending/seen/bloom writes), shaving ~2 s of
+            # fixed startup from every crawl job.
+            rows = frontier.collect()
+            n_seed = len(rows)
+            self.catalog.append_round_local(
+                pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
+                         schema=FRONTIER_PA_SCHEMA),
+                "pending", 0)
+            hashes = [r["url_hash"] for r in rows]
+            self._write_seen_driver(hashes, 0)
+            self._bloom_mem = fam.build_driver(hashes)
+            self._bloom_mem_round = 0
+            self._write_filter_driver(self._bloom_mem, 0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
                         "pending_seq_range": [0, max(0, n_seed - 1)],
@@ -905,27 +820,21 @@ class CrawlEngine:
         spark = self.spark
         writes = self._writes
         _t0 = time.time()
+        # drain check: every meta a run resumes from counted its pending
+        # rows — crawl and recrawl_enqueued rounds as pending_next, the seed
+        # round as enqueued
+        known_pending = progress.get("pending_next", progress["enqueued"])
+        if known_pending == 0:
+            self._finalize_prev()
+            meta = {**progress, "round": r, "finalized": True, "phase": "drained"}
+            self.catalog.commit_round(r, [], meta)
+            return meta
         # pending: the in-memory frontier from last round (write pipelining —
         # its parquet write may still be in flight) or, on resume / first
         # round, the committed checkpoint
         pending = (self._pending_mem if self._pending_mem is not None
                    else self.catalog.read_round(spark, "pending", r - 1,
                                                 schema=FRONTIER_SCHEMA))
-        # drain check: the prior round's meta already counted pending rows
-        # (pending_next / seed enqueued), so only fall back to a head(1)
-        # probe job when the count is absent (legacy checkpoints)
-        known_pending = progress.get("pending_next",
-                                     progress.get("enqueued")
-                                     if progress.get("phase") == "seeded"
-                                     else None)
-        drained = (pending is None
-                   or (known_pending == 0 if known_pending is not None
-                       else not pending.head(1)))
-        if drained:
-            self._finalize_prev()
-            meta = {**progress, "round": r, "finalized": True, "phase": "drained"}
-            self.catalog.commit_round(r, [], meta)
-            return meta
 
         # --- politeness: per-host budget window (the host shuffle) ---------
         if not cfg.politeness_budget and not cfg.batch_size:
@@ -941,17 +850,11 @@ class CrawlEngine:
             admitted, deferred = pending, spark.range(0).select(
                 *ex["empty_pending"])
         else:
-            # Salting is a large-frontier knob: below ~10k rows/round the
-            # two-stage top-k's extra partial agg costs more than the skew
-            # it removes (SCALING.json skew_probe_bfs: salt8 1.09x SLOWER
-            # on a 92%-one-host crawl at limit 10k), while at 2M rows it
-            # wins 1.85x -> 1.29x (skew_probe). "auto" gates on the prior
-            # round's recorded frontier size; admission rows are
-            # salt-invariant, so the gate cannot change crawl results.
-            salt_n = resolve_salt_n(cfg.budget_salt_n, known_pending)
+            # admission rows are salt-invariant: budget_salt_n changes the
+            # physical plan only, never crawl results
             admitted, deferred = apply_host_budget(
                 pending, cfg.politeness_budget, order_cols=("depth", "seq"),
-                salt_n=salt_n, scope=cfg.budget_scope)
+                salt_n=cfg.budget_salt_n, scope=cfg.budget_scope)
         if cfg.batch_size and cfg.batch_size > 0:
             # coordinator batch semantics (crawlCoordinator.ts:33-38): take
             # the first batch_size rows in FIFO (seq) order
@@ -973,25 +876,19 @@ class CrawlEngine:
         # at full width without an extra shuffle of the html payload (an
         # explicit repartition here measured 3.6x slower in the bulk path).
         #
-        # Small-frontier fast path: a BFS round's frontier is orders of
-        # magnitude smaller than the standing corpus, and a left join can't
-        # broadcast its left side — so the plain plan re-EXCHANGES the full
-        # corpus (html payloads included) every round, which measured as
-        # ~3.5 s/round of pure fixed cost at sf0.1 regardless of round size.
-        # Semi-reducing the corpus with a broadcast of the admitted key set
-        # first means the join shuffles only the matched pages (≤ admitted
-        # rows). Identity-preserving: reducing the right side of a left
-        # join by the left side's keys changes nothing. Gated on the
-        # driver-known pending count: a 10^10-frontier round with millions
-        # of admitted rows would blow the key broadcast, and falls back to
-        # the hash join (deployment posture there: corpus bucketed by
-        # url_hash, which removes the corpus exchange instead).
-        corpus_side = self.corpus
-        if (cfg.fetch_semi_max > 0 and known_pending is not None
-                and 0 < known_pending <= cfg.fetch_semi_max):
-            keys = admitted.select(ex["keys_sel"])
-            corpus_side = self.corpus.join(F.broadcast(keys),
-                                           "page_url_hash", "left_semi")
+        # A round's frontier is orders of magnitude smaller than the
+        # standing corpus, and a left join can't broadcast its left side —
+        # so the plain plan re-EXCHANGES the full corpus (html payloads
+        # included) every round, which measured as ~3.5 s/round of pure
+        # fixed cost at sf0.1 regardless of round size. Semi-reducing the
+        # corpus with a broadcast of the admitted key set first means the
+        # join shuffles only the matched pages (≤ admitted rows).
+        # Identity-preserving: reducing the right side of a left join by
+        # the left side's keys changes nothing. The key set is bounded by
+        # the job's limit (≤ 50k rows).
+        corpus_side = self.corpus.join(
+            F.broadcast(admitted.select(ex["keys_sel"])),
+            "page_url_hash", "left_semi")
         # F11: a corpus miss carries an error message like a fetch error
         # would (ex["error_msg"]; simulate_fetch_errors draws all five
         # failure classes deterministically from the url hash).
@@ -1016,7 +913,7 @@ class CrawlEngine:
         # measured slower than 32×100-row tasks on identical rows (0.78 s
         # vs 0.65 s for 3200 pages — tools/kernel_bench-style A/B).
         # Driver-known count, deterministic; big rounds keep full width.
-        if known_pending is not None and known_pending <= 4096:
+        if known_pending <= 4096:
             fetched = fetched.repartition(
                 max(1, min(spark.sparkContext.defaultParallelism,
                            (known_pending + 63) // 64)), "url_hash")
@@ -1041,13 +938,9 @@ class CrawlEngine:
         # blocks, so the extraction work is not re-partitioned. The metrics
         # aggregation stays on the full-width frame — its rows record
         # spark_partition_id() lineage, which the view would renumber.
-        if known_pending is not None:
-            n_view = max(1, min(spark.sparkContext.defaultParallelism,
-                                (known_pending + 999) // 1000))
-            docs_view = docs.coalesce(n_view)
-        else:
-            n_view = None
-            docs_view = docs
+        n_view = max(1, min(spark.sparkContext.defaultParallelism,
+                            (known_pending + 999) // 1000))
+        docs_view = docs.coalesce(n_view)
 
         final_attempt = ex["final_attempt"]
 
@@ -1057,14 +950,11 @@ class CrawlEngine:
         # the outcome counts: both evaluate the cached docs frame (block
         # locks serialize per-partition compute), so wall time is ~max of
         # the two jobs instead of their sum. The width_bucket bounds come
-        # from the prior round's recorded pending seq range when available
-        # (bounds only need to COVER the admitted parents' seqs — bucket
-        # boundaries don't affect the dense numbering, which orders by
-        # bucket then (parent_seq, link_pos)); on legacy/resumed checkpoints
-        # without the range, materialization waits for the outcome job's
-        # min/max seq.
+        # from the prior round's recorded pending seq range (bounds only
+        # need to COVER the admitted parents' seqs — bucket boundaries
+        # don't affect the dense numbering, which orders by bucket then
+        # (parent_seq, link_pos)).
         enqueued = progress["enqueued"]
-        disc_build = None
         disc_fut = None
         if enqueued < cfg.limit:
             links = (
@@ -1095,7 +985,6 @@ class CrawlEngine:
             # round checkpoint is CUMULATIVE (delta OR-merged into the prior
             # round's segments at write time), so reading the seen-filter is
             # one round directory — O(1) per round, not O(rounds) re-merges.
-            driver_bloom = fam.total_bytes <= DRIVER_MERGE_MAX_BYTES
             seen = self._read_seen(spark, r - 1)
             # The probabilistic pre-filter earns its keep only once the
             # seen set is large: below prefilter_min_seen hashes the exact
@@ -1103,27 +992,20 @@ class CrawlEngine:
             # segment broadcast + Arrow probe stage it would precede
             # (BENCH.md r6 probe: 0.57s vs 1.09s at 5k seen hashes), so
             # small standing frontiers skip the probe. The filter is still
-            # primed and maintained every round — checkpoints, resume
-            # geometry, and the at-scale path are untouched; like
-            # budget_salt_n='auto' this gates only the physical plan,
+            # primed and maintained every round — checkpoints and resume
+            # geometry are untouched; this gates only the physical plan,
             # never membership results.
-            prefilter_on = progress["enqueued"] > cfg.prefilter_min_seen
-            segments = None
-            if driver_bloom:
-                if self._bloom_mem is None or self._bloom_mem_round != r - 1:
-                    seg_df = self._latest_bloom(spark, up_to_round=r - 1)
-                    if seg_df is not None:
-                        self._bloom_mem = segments_to_driver(seg_df)
-                        self._bloom_mem_round = r - 1
-                if prefilter_on and self._bloom_mem is not None:
-                    # driver-resident filter: hand the dict straight to the
-                    # probe (broadcast once per executor) — no per-row
-                    # bitmap column, no createDataFrame scan per round
-                    segments = self._bloom_mem
-            else:
-                segments = self._latest_bloom(spark, up_to_round=r - 1)
-            if prefilter_on:
-                links = fam.filter_new(links, segments, seen)
+            if self._bloom_mem is None or self._bloom_mem_round != r - 1:
+                seg_df = self._latest_bloom(spark, up_to_round=r - 1)
+                if seg_df is not None:
+                    self._bloom_mem = segments_to_driver(seg_df)
+                    self._bloom_mem_round = r - 1
+            if progress["enqueued"] > cfg.prefilter_min_seen:
+                # driver-resident filter: hand the dict straight to the
+                # probe (broadcast once per executor) — no per-row bitmap
+                # column, no createDataFrame scan per round. No segments
+                # (missing checkpoint) degrades to the exact anti-join.
+                links = fam.filter_new(links, self._bloom_mem, seen)
             elif seen is not None:
                 links = exact_antijoin(links, seen)
 
@@ -1154,23 +1036,19 @@ class CrawlEngine:
                     .select("*", ex["lrn"])
                     .select(*ex["ranked_sel"])
                 )
-                if n_view is not None:
-                    # checkpoint the frontier delta at round-size-matched
-                    # width: its consumers (counts collect, enqueue select,
-                    # pending write) are all thin per-row work, and 64
-                    # splinter blocks/files per small round cost more in
-                    # task launches than the data
-                    ranked_df = ranked_df.coalesce(n_view)
-                return ranked_df.localCheckpoint()
+                # checkpoint the frontier delta at round-size-matched width:
+                # its consumers (counts collect, enqueue select, pending
+                # write) are all thin per-row work, and 64 splinter
+                # blocks/files per small round cost more in task launches
+                # than the data
+                return ranked_df.coalesce(n_view).localCheckpoint()
 
-            bounds = progress.get("pending_seq_range")
-            if bounds is not None:
-                disc_fut = writes.submit(disc_build, bounds[0], bounds[1])
+            lo, hi = progress["pending_seq_range"]
+            disc_fut = writes.submit(disc_build, lo, hi)
         _t_plan = time.time()
 
-        # One job: outcome counts (progress/retry math) + the admitted seq
-        # range (dense-seq bucketing fallback for checkpoints without a
-        # recorded pending seq range). Submitted ASYNC: nothing in the round
+        # One job: outcome counts (progress/retry math). Submitted ASYNC:
+        # nothing in the round
         # needs the result before meta-build time — the drain check subsumes
         # `done >= limit` (done counts admitted rows, which are capped by
         # the enqueue limit, so done can only reach the limit when pending
@@ -1178,7 +1056,7 @@ class CrawlEngine:
         # width_bucket bounds come from pending_seq_range. The job runs
         # concurrently with the discovery checkpoint and the doc writes
         # (block-level cache locks make the shared docs materialization
-        # single-compute). The no-bounds fallback resolves it early.
+        # single-compute).
         def _outcome_job():
             return (
                 docs_view.groupBy("status", ex["outcome_key"])
@@ -1221,24 +1099,12 @@ class CrawlEngine:
         new_rows = None
         ranked = None
         n_new = 0
-        if disc_build is not None:
+        if disc_fut is not None:
             capacity = cfg.limit - enqueued
             # Buckets whose cumulative offset already exceeds the enqueue
             # capacity are pruned before the offsets join.
-            if disc_fut is not None:
-                ranked = disc_fut.result()
-                _t_ranked = time.time()
-            else:
-                # no recorded pending_seq_range (resume/legacy checkpoint):
-                # the outcome job's min/max seq supplies the bounds
-                outcome_rows = outcome_fut.result()
-                outcome_fut = None
-                seq_lo = min((row["min_seq"] for row in outcome_rows),
-                             default=0)
-                seq_hi = max((row["max_seq"] for row in outcome_rows),
-                             default=0)
-                ranked = disc_build(seq_lo, seq_hi)
-                _t_ranked = time.time()
+            ranked = disc_fut.result()
+            _t_ranked = time.time()
             counts = {row["__bucket"]: row["cnt"] for row in
                       ranked.groupBy("__bucket").agg(
                           F.max("__lrn").alias("cnt")).collect()}
@@ -1343,100 +1209,52 @@ class CrawlEngine:
                 self._seen_uncommitted.append(
                     (r, self.catalog.round_path("seen", r), True))
             # incremental checkpoint: merge this round's delta into the
-            # previous cumulative segment set ONCE, write it as round r.
-            # Driver-resident filters (small crawls: the per-round delta is
-            # bounded by the job's enqueue limit) collect the new hashes
-            # once, build/merge the delta in numpy, and write BOTH the seen
-            # delta and the cumulative bloom with pyarrow on the driver —
-            # three Spark jobs per round (build_segments, seen write, bloom
-            # write) become one collect. Deployment-size filters keep the
-            # distributed build + applyInPandas merge + Spark writes.
-            if driver_bloom:
-                import pyarrow as pa
-
-                hashes = [row["url_hash"]
-                          for row in new_rows.select("url_hash").collect()]
-                if not compact_seen:
-                    self.catalog.append_round_local(
-                        pa.table({"url_hash": pa.array(hashes,
-                                                       type=pa.string())}),
-                        "seen", r)
-                    self._seen_uncommitted.append(
-                        (r, self.catalog.round_path("seen", r), False))
-                build_hashes = hashes
-                if self._bloom_mem is None and seen is not None:
-                    # prior bloom checkpoint missing/corrupt (filter_new
-                    # degraded to the exact anti-join): REBUILD the
-                    # cumulative filter from the seen history — committing
-                    # a delta-only bitmap as 'cumulative' would bake in
-                    # permanent false negatives for every pre-corruption
-                    # URL. Bounded: driver-resident filters imply the zod
-                    # limit cap on enqueued rows.
-                    build_hashes = hashes + [
-                        row["url_hash"]
-                        for row in seen.select("url_hash").collect()]
-                delta_mem = fam.build_driver(build_hashes)
-                self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
-                                                   delta_mem)
-                self.catalog.append_round_local(
-                    pa.table({
-                        "bucket": pa.array(sorted(self._bloom_mem),
-                                           type=pa.int32()),
-                        "bitmap": pa.array(
-                            [self._bloom_mem[b]
-                             for b in sorted(self._bloom_mem)],
-                            type=pa.binary()),
-                    }),
-                    "bloom", r)
-            else:
-                # Deployment-size filters: seen delta + cumulative bloom are
-                # written SYNCHRONOUSLY — the next round's bloom pre-filter
-                # must include this round's URLs (a stale bloom's false
-                # negatives would mark seen URLs definitely-new and enqueue
-                # duplicates), and both files are read next round ahead of
-                # their deferred manifest commit.
-                if not compact_seen:
-                    self.catalog.append_round(
-                        new_rows.select("url_hash"), "seen", r)
-                    self._seen_uncommitted.append(
-                        (r, self.catalog.round_path("seen", r), False))
-                delta = fam.build_segments(new_rows)
-                if segments is not None:
-                    cumulative = fam.merge_segments(delta.unionByName(segments))
-                elif seen is not None:
-                    # rebuild from the exact seen history (see driver path)
-                    cumulative = fam.merge_segments(delta.unionByName(
-                        fam.build_segments(seen)))
-                else:
-                    cumulative = delta
-                self._bloom_mem = None
-                self.catalog.append_round(cumulative, "bloom", r)
-                self._bloom_uncommitted = (
-                    r, self.catalog.round_path("bloom", r))
+            # driver-resident cumulative filter ONCE, write it as round r.
+            # The per-round delta is bounded by the job's enqueue limit, so
+            # the new hashes are collected once, the delta is built/merged
+            # in numpy, and BOTH the seen delta and the cumulative filter
+            # are written with pyarrow on the driver — one collect instead
+            # of three Spark jobs (segment build, seen write, bloom write).
+            hashes = [row["url_hash"]
+                      for row in new_rows.select("url_hash").collect()]
+            if not compact_seen:
+                self._write_seen_driver(hashes, r)
+                self._seen_uncommitted.append(
+                    (r, self.catalog.round_path("seen", r), False))
+            build_hashes = hashes
+            if self._bloom_mem is None and seen is not None:
+                # prior bloom checkpoint missing/corrupt (filter_new
+                # degraded to the exact anti-join): REBUILD the cumulative
+                # filter from the seen history — committing a delta-only
+                # bitmap as 'cumulative' would bake in permanent false
+                # negatives for every pre-corruption URL. Bounded by the
+                # zod limit cap on enqueued rows.
+                build_hashes = hashes + [
+                    row["url_hash"]
+                    for row in seen.select("url_hash").collect()]
+            self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
+                                               fam.build_driver(build_hashes))
+            self._write_filter_driver(self._bloom_mem, r)
         # next-pending count by arithmetic over aggregates this round already
         # computed — no re-read of the just-written files (which cost a
         # footer-scan Spark job per round):
         #   pending(r)  = deferred + retries + newly enqueued
         #   deferred    = pending(r-1) - admitted      (budget/batch split)
         # pending(r-1) is the prior round's recorded pending_next (the seed
-        # round records it as `enqueued` = seed count); legacy checkpoints
-        # without either fall back to counting the read DataFrame.
-        if outcome_fut is not None:
-            outcome_rows = outcome_fut.result()
+        # round records it as `enqueued` = seed count).
+        outcome_rows = outcome_fut.result()
         outcome_counts = {(row["status"], row["final"]): row["count"]
                           for row in outcome_rows}
         n_fetched = sum(v for (s_, fin), v in outcome_counts.items()
                         if s_ == 200)
         n_failed = sum(v for (s_, fin), v in outcome_counts.items()
                        if s_ != 200 and fin)
-        n_pending_prev = (known_pending if known_pending is not None
-                          else pending.count())
         n_admitted = sum(outcome_counts.values())
         n_retries = 0
         if cfg.max_attempts > 1:
             n_retries = sum(v for (s_, fin), v in outcome_counts.items()
                             if s_ != 200 and not fin)
-        n_pending_next = (n_pending_prev - n_admitted) + n_retries + n_new
+        n_pending_next = (known_pending - n_admitted) + n_retries + n_new
         if self._bloom_mem is not None:
             # cumulative through this round whether or not a delta was added
             self._bloom_mem_round = r
@@ -1451,12 +1269,11 @@ class CrawlEngine:
         # seqs within the prior range, so the union of ranges covers them.
         # Drives the next round's width_bucket bounds without waiting for
         # its outcome job (concurrent discovery materialization).
-        prev_rng = progress.get("pending_seq_range")
+        prev_rng = progress["pending_seq_range"]
         if n_new > 0:
             rng = [enqueued, enqueued + n_new - 1]
-            if prev_rng is not None and (cfg.politeness_budget
-                                         or cfg.batch_size
-                                         or cfg.max_attempts > 1):
+            if (cfg.politeness_budget or cfg.batch_size
+                    or cfg.max_attempts > 1):
                 rng = [min(prev_rng[0], rng[0]), max(prev_rng[1], rng[1])]
         else:
             rng = prev_rng
@@ -1479,9 +1296,9 @@ class CrawlEngine:
                 # counts = the per-bucket count collect
                 "plan": round(_t_plan - _t0, 3),
                 "disc": round((_t_ranked - _t_plan), 3)
-                if disc_build is not None else 0.0,
+                if disc_fut is not None else 0.0,
                 "counts": round((_t_counts - _t_ranked), 3)
-                if disc_build is not None else 0.0,
+                if disc_fut is not None else 0.0,
             },
         }
         tables = ["pending", "results", "visits", "metrics"]

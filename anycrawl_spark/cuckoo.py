@@ -185,7 +185,7 @@ def build_segments(df: DataFrame, url_hash_col: str = "url_hash",
 def build_segments_driver(hashes, num_buckets: int = 32,
                           n_slots: int = DEFAULT_N_SLOTS) -> dict[int, bytes]:
     """Driver-side build over an already-collected hash list (the
-    driver-resident small-filter fast path, seen.DRIVER_MERGE_MAX_BYTES)."""
+    driver-resident filter the crawl engine keeps)."""
     by_bucket: dict[int, list] = {}
     for h in hashes:
         by_bucket.setdefault(int(h[:8], 16) % num_buckets, []).append(h)
@@ -222,21 +222,6 @@ def _merge_tables(blobs: list[bytes], n_slots: int) -> bytes:
         if saturated:
             break
     return _encode(base, saturated)
-
-
-def merge_segments(segments: DataFrame,
-                   n_slots: int = DEFAULT_N_SLOTS) -> DataFrame:
-    """Distributed per-bucket merge (the deployment-size cumulative
-    checkpoint path — counterpart of seen.merge_segments)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "bitmap": [_merge_tables([bytes(b) for b in pdf["bitmap"]],
-                                     n_slots)],
-        })
-
-    return segments.groupBy("bucket").applyInPandas(merge, schema=SEGMENT_SCHEMA)
 
 
 def merge_into_driver(cache: dict[int, bytes], delta: dict[int, bytes],

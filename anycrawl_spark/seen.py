@@ -9,9 +9,11 @@ massive shuffle, so we put a **partitioned Bloom filter in front of it**:
 
 - the hash space of ``sha2(canonical_url, 256)`` is split into
   ``num_buckets`` partitions; each bucket owns an ``m_bits`` bit array;
-- segments are built per-bucket with ``applyInPandas`` (numpy bitset, no
-  driver involvement), OR-merged across rounds, and checkpointed (they are
-  just ``(bucket, bitmap)`` rows — Iceberg/parquet friendly);
+- segments are numpy bitsets, OR-merged across rounds and checkpointed
+  (they are just ``(bucket, bitmap)`` rows — Iceberg/parquet friendly). The
+  crawl engine keeps the cumulative filter on the driver, since a job's
+  limit bounds it (DRIVER_MERGE_MAX_BYTES); ``build_segments`` builds the
+  same rows per bucket with ``applyInPandas`` for DataFrame callers;
 - candidate filtering joins candidates to their bucket's bitmap and tests
   k positions inside an Arrow batch. Rows the filter rejects are
   **definitely new** (no false negatives) and skip the exact join entirely;
@@ -72,27 +74,11 @@ def build_segments(df: DataFrame, url_hash_col: str = "url_hash",
     )
 
 
-def merge_segments(segments: DataFrame) -> DataFrame:
-    """OR-merge multiple rounds' segments per bucket."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        arrays = [np.frombuffer(b, dtype=np.uint8) for b in pdf["bitmap"]]
-        merged = arrays[0].copy()
-        for a in arrays[1:]:
-            np.bitwise_or(merged, a, out=merged)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])],
-                             "bitmap": [merged.tobytes()]})
-
-    return segments.groupBy("bucket").applyInPandas(merge, schema=SEGMENT_SCHEMA)
-
-
-# Below this total filter size the cumulative OR-merge runs on the driver
-# (collect 32 tiny delta rows, numpy OR, re-create a 32-row DataFrame) —
-# saving two Spark jobs per crawl round (the previous-round parquet re-read
-# and the distributed merge). Above it — deployment-scale filters, e.g.
-# 1024 buckets x 2^30 bits for a 10^10-URL frontier — the distributed
-# applyInPandas merge path is used unchanged. Same adaptive reasoning as a
-# broadcast-join threshold.
+# The largest seen filter (total serialized bytes across buckets) that
+# CrawlConfig accepts. The crawl engine keeps the cumulative filter on the
+# driver — built, OR-merged, checkpointed with pyarrow, and broadcast to the
+# probe — which the zod limit (≤ 50k enqueued URLs per job) keeps small:
+# the default geometry is 512 KiB (cuckoo: 1 MiB).
 DRIVER_MERGE_MAX_BYTES = 64 * 2**20
 
 
@@ -101,8 +87,8 @@ def build_segments_driver(hashes, num_buckets: int = DEFAULT_NUM_BUCKETS,
                           k: int = DEFAULT_K) -> dict[int, bytes]:
     """Driver-side build_segments over an already-collected hash list —
     same bucket/position derivation as the distributed path (bucket_col /
-    _positions). Only for driver-resident filters (DRIVER_MERGE_MAX_BYTES),
-    where the per-round delta is bounded by the job's enqueue limit."""
+    _positions). The per-round delta is bounded by the job's enqueue
+    limit."""
     bitmaps: dict[int, np.ndarray] = {}
     for h in hashes:
         b = int(h[:8], 16) % num_buckets
@@ -134,33 +120,24 @@ def merge_into_driver(cache: dict[int, bytes],
     return out
 
 
-def segments_from_driver(spark, cache: dict[int, bytes]) -> DataFrame:
-    """Driver dict → (bucket, bitmap) DataFrame (32ish rows; broadcast-able)."""
-    return spark.createDataFrame(
-        [(int(b), bytearray(bm)) for b, bm in sorted(cache.items())],
-        SEGMENT_SCHEMA)
-
-
 class SeenFilterFamily:
     """Uniform facade over the two seen-filter families (north rule:
     "partitioned Bloom/cuckoo filter"). Both share the segment-row shape
     ``(bucket int, bitmap binary)``, the sha256 hash-space sharding, and the
     pre-filter + exact-anti-join contract, so the crawl engine is family-
     agnostic: every checkpoint/merge/filter touchpoint goes through one of
-    these callables. Crawl results are byte-identical across families —
+    these callables, all driver-resident. Crawl results are byte-identical
+    across families —
     the filter only routes candidates between the definitely-new fast path
     and the exact anti-join (tests/test_crawl.py cuckoo-parity test)."""
 
-    def __init__(self, name, total_bytes, geometry, build_segments,
-                 build_driver, merge_driver, merge_segments, filter_new,
-                 delete_driver=None):
+    def __init__(self, name, total_bytes, geometry, build_driver,
+                 merge_driver, filter_new, delete_driver=None):
         self.name = name
         self.total_bytes = total_bytes     # serialized bytes across buckets
         self.geometry = geometry           # resume-fingerprint (JSON list)
-        self.build_segments = build_segments
         self.build_driver = build_driver
         self.merge_driver = merge_driver
-        self.merge_segments = merge_segments
         self.filter_new = filter_new
         # TTL/recrawl eviction: cuckoo supports true deletion; bloom does
         # not (callers rebuild from the exact seen history instead)
@@ -179,12 +156,9 @@ def filter_family(name: str = "bloom", *,
             "bloom",
             num_buckets * (m_bits // 8),
             [num_buckets, m_bits, k],
-            lambda df: build_segments(df, num_buckets=num_buckets,
-                                      m_bits=m_bits, k=k),
             lambda hashes: build_segments_driver(
                 hashes, num_buckets=num_buckets, m_bits=m_bits, k=k),
             merge_into_driver,
-            merge_segments,
             lambda cand, segs, seen: filter_new(
                 cand, segs, seen, num_buckets=num_buckets,
                 m_bits=m_bits, k=k),
@@ -197,13 +171,10 @@ def filter_family(name: str = "bloom", *,
             "cuckoo",
             num_buckets * cuckoo.segment_nbytes(slots),
             ["cuckoo", num_buckets, slots],
-            lambda df: cuckoo.build_segments(df, num_buckets=num_buckets,
-                                             n_slots=slots),
             lambda hashes: cuckoo.build_segments_driver(
                 hashes, num_buckets=num_buckets, n_slots=slots),
             lambda cache, delta: cuckoo.merge_into_driver(
                 cache, delta, n_slots=slots),
-            lambda segs: cuckoo.merge_segments(segs, n_slots=slots),
             lambda cand, segs, seen: cuckoo.filter_new(
                 cand, segs, seen, num_buckets=num_buckets, n_slots=slots),
             delete_driver=lambda cache, hashes: cuckoo.delete_driver(
@@ -246,11 +217,10 @@ def prefilter_antijoin(candidates: DataFrame,
     filter can never CONFIRM membership — dropping on a filter hit would
     lose rows to false positives).
 
-    ``segments`` is either the distributed ``(bucket, bitmap)`` DataFrame
-    or — for driver-resident filters (≤ DRIVER_MERGE_MAX_BYTES) — the
-    driver dict itself. The dict path ships the whole filter ONCE per
-    executor as a Spark broadcast and probes by bucket lookup inside the
-    Arrow batch; the old join path attached the full bucket bitmap (16 KiB
+    ``segments`` is either a ``(bucket, bitmap)`` DataFrame or the
+    driver-resident dict the crawl engine keeps. The dict path ships the
+    whole filter ONCE per executor as a Spark broadcast and probes by
+    bucket lookup inside the Arrow batch; the old join path attached the full bucket bitmap (16 KiB
     at default geometry, far more at deployment geometry) to EVERY
     candidate row and pushed those bytes through the Python boundary
     (guide §4.1: pass only the columns the function needs).

@@ -3,6 +3,7 @@ limits, depth, strategies, globs, politeness budgets, robots, batch parity,
 checkpoint resume (SURVEY.md §5.2 items 2-4)."""
 
 import os
+import stat
 
 import pytest
 from pyspark.sql import functions as F
@@ -153,7 +154,37 @@ class TestCrawlParity:
         assert any("/blog/" not in v[1] for v in visits)
 
 
+def assert_resumable_metas(catalog):
+    """Every committed meta a run can resume from records its pending row
+    count (crawl and recrawl_enqueued rounds as pending_next, the seed round
+    as enqueued) and the seq range of that pending frontier — the round
+    loop reads both instead of probing or counting the pending table."""
+    metas = catalog._read_manifest()["meta"]
+    phases = set()
+    for meta in metas.values():
+        phases.add(meta["phase"])
+        if not meta["finalized"]:
+            assert meta["phase"] in ("seeded", "crawl", "recrawl_enqueued")
+        if meta["phase"] in ("seeded", "crawl", "recrawl_enqueued"):
+            count_key = "enqueued" if meta["phase"] == "seeded" else "pending_next"
+            assert isinstance(meta[count_key], int), meta
+            lo, hi = meta["pending_seq_range"]
+            assert isinstance(lo, int) and isinstance(hi, int) and lo <= hi
+    return phases
+
+
 class TestResume:
+    def test_resumable_metas_carry_pending_counts(self, spark, small_corpus,
+                                                  tmp_root):
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=3,
+                  limit=15, respect_robots=False)
+        eng = CrawlEngine(spark, small_corpus,
+                          os.path.join(tmp_root, "resume_metas"))
+        eng.run(CrawlConfig(job_id="rm", max_rounds=1, **kw))
+        assert assert_resumable_metas(eng.catalog) == {"seeded", "crawl"}
+        eng.run(CrawlConfig(job_id="rm", **kw), resume=True)
+        assert "crawl" in assert_resumable_metas(eng.catalog)
+
     def test_kill_and_resume_exact(self, spark, small_corpus, tmp_root):
         kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5, limit=40,
                   respect_robots=False)
@@ -287,30 +318,6 @@ class TestRetries:
         # failure counted once in totals despite 3 visits
         n404_urls = len([u for u, vs in by_url.items() if all(s == 404 for _, s, _ in vs)])
         assert summary["failed"] == n404_urls
-
-
-class TestAutoSaltGate:
-    def test_resolve_salt_n(self):
-        """'auto' salts only above the measured crossover; explicit values
-        pass through; CrawlConfig validates the knob."""
-        import pytest
-
-        from anycrawl_spark.crawl import (CrawlConfig, SALT_FRONTIER_THRESHOLD,
-                                          resolve_salt_n)
-
-        assert resolve_salt_n("auto", None) == 0
-        assert resolve_salt_n("auto", 10_000) == 0
-        assert resolve_salt_n("auto", SALT_FRONTIER_THRESHOLD - 1) == 0
-        assert resolve_salt_n("auto", SALT_FRONTIER_THRESHOLD) == 8
-        assert resolve_salt_n(0, 10**9) == 0          # explicit wins
-        assert resolve_salt_n(4, None) == 4
-        CrawlConfig(job_id="j", seed_url="https://a.test/")  # default 'auto' ok
-        with pytest.raises(ValueError):
-            CrawlConfig(job_id="j", seed_url="https://a.test/",
-                        budget_salt_n="always")
-        with pytest.raises(ValueError):
-            CrawlConfig(job_id="j", seed_url="https://a.test/",
-                        budget_salt_n=-1)
 
 
 class TestSaltedBudgetParity:
@@ -533,6 +540,20 @@ class TestConfigBounds:
             CrawlConfig(job_id="b", seed_url="https://x.test/", limit=0)
         with pytest.raises(ValueError):
             CrawlConfig(job_id="b", seed_url="https://x.test/", limit=50_001)
+        # budget_salt_n is a plain int >= 0 (0 = plain window, the default)
+        assert CrawlConfig(job_id="b",
+                           seed_url="https://x.test/").budget_salt_n == 0
+        for bad_salt in ("always", "auto", -1):
+            with pytest.raises(ValueError):
+                CrawlConfig(job_id="b", seed_url="https://x.test/",
+                            budget_salt_n=bad_salt)
+        # the seen filter is driver-resident: geometries above
+        # DRIVER_MERGE_MAX_BYTES are rejected for both families
+        for oversize in (dict(bloom_num_buckets=1024, bloom_m_bits=1 << 20),
+                         dict(seen_filter="cuckoo", cuckoo_n_slots=1 << 20)):
+            with pytest.raises(ValueError, match="driver-resident"):
+                CrawlConfig(job_id="b", seed_url="https://x.test/",
+                            **oversize)
 
     def test_seed_url_must_be_absolute_http(self):
         """z.string().url() rejects non-URL seeds; a scheme-less seed would
@@ -561,6 +582,31 @@ class TestConfigBounds:
                                     strategy="same-hostname", max_depth=2,
                                     limit=10, respect_robots=False,
                                     bloom_m_bits=1 << 16), resume=True)
+
+
+class TestManifestDurability:
+    def test_manifest_fsynced_before_replace(self, tmp_path, monkeypatch):
+        """The manifest is the commit point: its tmp file is fsynced before
+        the rename publishes it, and the directory after it."""
+        from anycrawl_spark.catalog import Catalog
+
+        cat = Catalog(tmp_path / "ck")
+        calls = []
+        real_fsync, real_replace = os.fsync, os.replace
+
+        def fsync(fd):
+            calls.append(("fsync", stat.S_ISDIR(os.fstat(fd).st_mode)))
+            real_fsync(fd)
+
+        def replace(src, dst):
+            calls.append(("replace", None))
+            real_replace(src, dst)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        monkeypatch.setattr(os, "replace", replace)
+        cat.commit_round(0, ["pending"], {"phase": "seeded"})
+        assert calls == [("fsync", False), ("replace", None), ("fsync", True)]
+        assert cat.committed_rounds("pending") == [0]
 
 
 class TestCorpusDedup:
@@ -770,6 +816,22 @@ class TestRecrawlEviction:
         seen_after = {r["url_hash"] for r in eng.catalog.read(
             spark, "seen").select("url_hash").collect()}
         assert victim_hashes <= seen_after
+
+    def test_recrawl_meta_carries_pending_counts(self, spark, small_corpus,
+                                                 tmp_root):
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=2,
+                  limit=8, respect_robots=False)
+        eng = CrawlEngine(spark, small_corpus,
+                          os.path.join(tmp_root, "recrawl_metas"))
+        eng.run(CrawlConfig(job_id="rq", **kw))
+        victim = sorted(v["url"] for v in eng.visits().collect()
+                        if v["status"] == 200)[:1]
+        cfg = CrawlConfig(job_id="rq", **kw)
+        eng.evict_urls(cfg, victim)
+        eng.reenqueue_urls(cfg, victim)
+        assert "recrawl_enqueued" in assert_resumable_metas(eng.catalog)
+        eng.run(CrawlConfig(job_id="rq", **{**kw, "limit": 9}), resume=True)
+        assert_resumable_metas(eng.catalog)
 
 
 class TestPrefilterGate:

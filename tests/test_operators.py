@@ -214,17 +214,64 @@ class TestSeenFilter:
         assert dist == local
 
     def test_segment_merge(self, spark):
-        from anycrawl_spark.seen import build_segments, filter_new, merge_segments
+        """Two rounds' driver-built segments OR-merge into exactly the
+        segments built from both rounds at once, and the merged filter
+        passes every member to the exact anti-join."""
+        from anycrawl_spark.seen import (build_segments_driver, filter_new,
+                                         merge_into_driver)
 
         a = spark.range(0, 50).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
         b = spark.range(50, 100).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
-        segs = merge_segments(
-            build_segments(a, num_buckets=4, m_bits=1 << 12, k=3).unionByName(
-                build_segments(b, num_buckets=4, m_bits=1 << 12, k=3)))
-        assert segs.count() <= 4
+        geo = dict(num_buckets=4, m_bits=1 << 12, k=3)
+        ha = [r["url_hash"] for r in a.collect()]
+        hb = [r["url_hash"] for r in b.collect()]
+        segs = merge_into_driver(build_segments_driver(ha, **geo),
+                                 build_segments_driver(hb, **geo))
+        assert len(segs) <= 4
+        assert segs == build_segments_driver(ha + hb, **geo)
         both = a.unionByName(b)
-        none_new = filter_new(both, segs, both, num_buckets=4, m_bits=1 << 12, k=3)
+        none_new = filter_new(both, segs, both, **geo)
         assert none_new.count() == 0
+
+    def test_duplicate_seen_rows_are_harmless(self, spark):
+        """The seen checkpoint is unique by construction, but neither
+        anti-join relies on it: with every seen hash present twice, the
+        exact anti-join and both prefilter families (DataFrame and dict
+        segments) return the same rows, each once."""
+        from anycrawl_spark import cuckoo, seen as bloom
+        from anycrawl_spark.seen import exact_antijoin
+
+        def hashed(lo, hi):
+            return spark.range(lo, hi).select(
+                "id", F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
+
+        cand = hashed(0, 400)
+        seen_once = hashed(0, 200).select("url_hash")
+        seen_twice = seen_once.unionByName(seen_once)
+        hashes = [r["url_hash"] for r in seen_once.collect()]
+        bgeo = dict(num_buckets=4, m_bits=1 << 12, k=3)
+        cgeo = dict(num_buckets=4, n_slots=1 << 8)
+        results = {
+            "exact": exact_antijoin(cand, seen_twice),
+            "bloom_df": bloom.filter_new(
+                cand, bloom.build_segments(seen_twice, **bgeo), seen_twice,
+                **bgeo),
+            "bloom_dict": bloom.filter_new(
+                cand, bloom.build_segments_driver(hashes, **bgeo),
+                seen_twice, **bgeo),
+            "cuckoo_df": cuckoo.filter_new(
+                cand, cuckoo.build_segments(seen_twice, **cgeo), seen_twice,
+                **cgeo),
+            "cuckoo_dict": cuckoo.filter_new(
+                cand, cuckoo.build_segments_driver(hashes, **cgeo),
+                seen_twice, **cgeo),
+        }
+        expect = sorted((r["id"], r["url_hash"]) for r in
+                        exact_antijoin(cand, seen_once).collect())
+        assert [i for i, _ in expect] == list(range(200, 400))
+        for name, df in results.items():
+            got = sorted((r["id"], r["url_hash"]) for r in df.collect())
+            assert got == expect, name
 
 
 class TestSalting:
