@@ -79,11 +79,11 @@ class Catalog:
         """Atomically mark ``round_no`` committed for all given tables.
 
         Tables named in ``replace`` have their round list REPLACED by
-        ``[round_no]`` (compaction: this round's write holds the full
-        cumulative content). The swap shares the round's single atomic
-        manifest write, so a kill at any point leaves either the old delta
-        chain or the compacted table — never a mix. Superseded round
-        directories are deleted after the commit; if that cleanup is
+        ``[round_no]``: this round's write holds the table's full cumulative
+        content (the crawl engine's seen and bloom tables). The swap shares
+        the round's single atomic manifest write, so a kill at any point
+        leaves either the old copy or the new one — never a mix. Superseded
+        round directories are deleted after the commit; if that cleanup is
         interrupted, drop_uncommitted removes them at resume (they are no
         longer in the manifest)."""
         manifest = self._read_manifest()

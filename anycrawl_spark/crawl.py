@@ -12,7 +12,8 @@ Each round r is one Spark batch over immutable checkpointed state:
                   path / depth / robots filters → in-batch dedup
                →  Bloom pre-filter + exact anti-join vs seen set
                →  enqueue-cap top-k → seq assignment → pending_{r+1}
-               →  seen segment, progress, per-partition lineage appended;
+               →  cumulative seen set + filter rewritten, progress and
+                  per-partition lineage appended;
                   manifest commit (atomic) → resumable
 
 Dedup semantics follow the reference's queue path (crawlee uniqueKey dedup at
@@ -113,10 +114,6 @@ class CrawlConfig:
     bloom_k: int = 4
     cuckoo_n_slots: int = 1 << 12        # 4-way cuckoo buckets per segment
     max_rounds: int = 1000
-    seen_compact_every: int = 8          # rewrite the seen table cumulatively
-                                         # every K seen-writing rounds so its
-                                         # read stays O(1) dirs, not O(rounds);
-                                         # 0 disables
     simulate_fetch_errors: bool = False  # F11: draw all five failure classes
                                          # from corpus misses (tests/fixtures)
     proxy: str | None = None             # request proxy option (mode keyword
@@ -287,25 +284,26 @@ class CrawlEngine:
             self.corpus = self.corpus.localCheckpoint(eager=False)
         self.catalog = Catalog(checkpoint_dir)
         self.robots = robots
-        # driver-resident cumulative seen-filter segments (CrawlConfig bounds
-        # the geometry by seen.DRIVER_MERGE_MAX_BYTES). _bloom_mem_round = the
-        # round the cache is cumulative through; invalidated on resume.
+        # driver-resident seen state, bounded by the job's limit (≤ 50k
+        # hashes): the exact hash set, the cumulative seen-filter segments
+        # (CrawlConfig bounds their geometry by seen.DRIVER_MERGE_MAX_BYTES),
+        # and a DataFrame over the seen directory they were last written to
+        # (or loaded from), which the round's exact anti-join reads. Filled
+        # by _load_seen, written by _write_seen.
+        self._seen: set[str] | None = None
         self._bloom_mem: dict[int, bytes] | None = None
-        self._bloom_mem_round = -1
+        self._seen_df: DataFrame | None = None
         # -- write pipelining (see _finalize_prev) --------------------------
         # The slow per-round parquet writes (results/visits/metrics/pending)
         # overlap the NEXT round's compute jobs: round r submits them async
         # and round r+1 finalizes (await -> commit -> release caches) right
         # before submitting its own writes. Next-round reads come from
         # in-memory state instead of committed files: _pending_mem (the
-        # frontier DataFrame), _bloom_mem (driver-resident filter), and
-        # _seen_uncommitted (synchronously-written seen files as
-        # (round, path, compacted) — compacted entries supersede every
-        # earlier round in _read_seen).
+        # frontier DataFrame) and the seen state above, whose directory is
+        # written synchronously ahead of its deferred commit.
         self._prev_inflight: dict | None = None
         self._graveyard: list = []      # caches from two rounds back
         self._pending_mem: DataFrame | None = None
-        self._seen_uncommitted: list[tuple[int, str, bool]] = []
         self._writes: ThreadPoolExecutor | None = None
 
     # -- state helpers ------------------------------------------------------
@@ -329,31 +327,6 @@ class CrawlEngine:
         return self.catalog.read_round(spark, "bloom", max(rounds),
                                        schema=SEGMENT_SCHEMA)
 
-    def _read_seen(self, spark: SparkSession,
-                   up_to_round: int) -> DataFrame | None:
-        """Seen-set union ≤ ``up_to_round``: committed rounds plus rounds
-        whose files this run wrote synchronously ahead of their deferred
-        manifest commit. An uncommitted COMPACTED round holds the full
-        cumulative hash set, so every older round is excluded from the
-        plan — not merely as an optimization: the compaction's deferred
-        commit (replace=['seen']) deletes those superseded directories,
-        and a plan still referencing them would hit FileNotFound when
-        evaluated after _finalize_prev (e.g. a back-to-back compaction or
-        a bloom rebuild with seen_compact_every=1)."""
-        compacted = [rr for rr, _p, comp in self._seen_uncommitted
-                     if comp and rr <= up_to_round]
-        floor = max(compacted) if compacted else None
-        rounds = [rr for rr in self.catalog.committed_rounds("seen")
-                  if rr <= up_to_round
-                  and (floor is None or rr > floor)]
-        paths = [self.catalog.round_path("seen", rr) for rr in rounds]
-        paths += [p for rr, p, _comp in self._seen_uncommitted
-                  if rr <= up_to_round and rr not in rounds
-                  and (floor is None or rr >= floor)]
-        if not paths:
-            return None
-        return spark.read.schema("url_hash string").parquet(*paths)
-
     def _finalize_prev(self) -> None:
         """Complete the previous round's deferred tail: await its parquet
         writes, commit its manifest entry, then release the caches retired
@@ -369,10 +342,6 @@ class CrawlEngine:
                 self.catalog.commit_round(prev["round"], prev["tables"],
                                           prev["meta"],
                                           replace=prev["replace"] or None)
-                committed_seen = set(self.catalog.committed_rounds("seen"))
-                self._seen_uncommitted = [
-                    (rr, p, comp) for rr, p, comp in self._seen_uncommitted
-                    if rr not in committed_seen]
             except BaseException:
                 # a failed write/commit aborts the run — release EVERY
                 # cached frame (this round's, the deferred tail's, and the
@@ -463,31 +432,64 @@ class CrawlEngine:
                 rows.append(row)
         return rows
 
-    def _write_seen_driver(self, hashes: list[str], round_no: int) -> None:
-        self.catalog.append_round_local(
-            pa.table({"url_hash": pa.array(hashes, type=pa.string())}),
-            "seen", round_no)
+    def _load_seen(self, fam, up_to_round: int) -> None:
+        """Fill the seen state from the checkpoint ≤ ``up_to_round``. The
+        exact set is the union of the committed seen rounds: one directory
+        in checkpoints this engine writes, a per-round delta chain in
+        older ones. The filter is the newest committed bloom round; when
+        none is committed it is rebuilt from the exact set (a partial
+        filter committed as cumulative would bake in false negatives)."""
+        # A manifest without a seen entry past the seed round was edited by
+        # hand (the commit swaps seen atomically): every enqueued hash is in
+        # a committed pending round, so their union stands in for the set
+        # until the next write (an evicted hash comes back as seen).
+        table = "seen" if self.catalog.committed_rounds("seen") else "pending"
+        self._seen_df = self.catalog.read(self.spark, table,
+                                          up_to_round=up_to_round,
+                                          schema="url_hash string")
+        self._seen = (set() if self._seen_df is None else
+                      {row["url_hash"] for row in self._seen_df.collect()})
+        prior = self._latest_bloom(self.spark, up_to_round)
+        self._bloom_mem = (segments_to_driver(prior) if prior is not None
+                           else fam.build_driver(sorted(self._seen)))
 
-    def _write_filter_driver(self, cache: dict[int, bytes],
-                             round_no: int) -> None:
+    def _add_seen(self, fam, hashes) -> None:
+        """Insert the hashes not yet seen into the exact set and the filter.
+        An already-seen hash is skipped: it would duplicate a seen row and
+        store a second cuckoo fingerprint copy of its key."""
+        new = [h for h in hashes if h not in self._seen]
+        self._seen.update(new)
+        self._bloom_mem = fam.merge_driver(self._bloom_mem,
+                                           fam.build_driver(new))
+
+    def _write_seen(self, round_no: int) -> None:
+        """The one writer of seen state: the full exact set, sorted, and the
+        cumulative filter, both as round ``round_no`` with pyarrow. Every
+        commit of them passes replace=['seen', 'bloom'], so each table has
+        exactly one committed directory. Synchronous: the next round's
+        anti-join reads this directory before its deferred commit lands."""
+        cache = self._bloom_mem
+        self.catalog.append_round_local(
+            pa.table({"url_hash": pa.array(sorted(self._seen),
+                                           type=pa.string())}),
+            "seen", round_no)
         self.catalog.append_round_local(
             pa.table({
                 "bucket": pa.array(sorted(cache), type=pa.int32()),
                 "bitmap": pa.array([cache[b] for b in sorted(cache)],
                                    type=pa.binary()),
             }), "bloom", round_no)
+        self._seen_df = self.spark.read.schema("url_hash string").parquet(
+            self.catalog.round_path("seen", round_no))
 
     def evict_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Remove URLs from the committed seen state (TTL expiry): the
-        exact seen set is rewritten compacted minus the evicted hashes,
-        and the cumulative filter is amended — cuckoo via true deletion
-        (fam.delete_driver; one copy per distinct key makes it
-        collision-safe), bloom or a saturated cuckoo segment via a full
-        rebuild from the compacted exact seen (the same rebuild-from-
-        history remedy the round loop applies to corrupt segments). Both
-        run on the driver: the seen set is bounded by the job's limit.
-        One commit, replace=['seen','bloom']."""
-        spark = self.spark
+        evicted hashes leave the exact set, and the cumulative filter is
+        amended — cuckoo via true deletion (fam.delete_driver; one copy per
+        distinct key makes it collision-safe), bloom or a saturated cuckoo
+        segment via a full rebuild from the exact set. Both run on the
+        driver: the seen set is bounded by the job's limit. One commit,
+        replace=['seen','bloom']."""
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to evict from")
@@ -499,51 +501,42 @@ class CrawlEngine:
         r = progress["round"] + 1
         fam = cfg.filter_family()
         self._check_geometry(fam)
+        self._load_seen(fam, progress["round"])
 
-        seen = self._read_seen(spark, progress["round"])
-        if seen is None:
-            raise ValueError("no seen state committed yet")
         requested = {row["url_hash"]
                      for row in self._canonical_rows(cfg, urls)}
-        seen_hashes = [row["url_hash"] for row in seen.collect()]
         # Evict only hashes actually IN the seen set: cuckoo deletion is
         # defined only for tracked insertions — deleting a never-inserted
         # hash could zero a colliding member's only fingerprint copy and
         # break the no-false-negative contract (cuckoo.py _delete).
-        hashes = sorted(requested.intersection(seen_hashes))
-        remaining = [h for h in seen_hashes if h not in requested]
-        self._write_seen_driver(remaining, r)
-
+        hashes = sorted(requested & self._seen)
+        self._seen.difference_update(hashes)
         deleted = False
         if fam.delete_driver is not None:
-            prior = self._latest_bloom(spark, progress["round"])
-            if prior is not None:
-                cache, skipped = fam.delete_driver(
-                    segments_to_driver(prior), hashes)
-                if not skipped:
-                    self._write_filter_driver(cache, r)
-                    deleted = True
+            cache, skipped = fam.delete_driver(self._bloom_mem, hashes)
+            if not skipped:
+                self._bloom_mem, deleted = cache, True
         if not deleted:
             # bloom (no deletion) / saturated segment: rebuild the
-            # cumulative filter from the compacted exact seen
-            self._write_filter_driver(fam.build_driver(remaining), r)
+            # cumulative filter from the exact set
+            self._bloom_mem = fam.build_driver(sorted(self._seen))
+        self._write_seen(r)
 
         meta = {**progress, "round": r, "finalized": True,
                 "pending_next": 0, "phase": "evicted",
                 "evicted": len(hashes), "filter_deletion": deleted}
         self.catalog.commit_round(r, ["seen", "bloom"], meta,
                                   replace=["seen", "bloom"])
-        self._bloom_mem, self._bloom_mem_round = None, -1
         return meta
 
     def reenqueue_urls(self, cfg: CrawlConfig, urls: list[str]) -> dict:
         """Enqueue URLs as a fresh pending round (the monitor re-check):
         frontier rows at depth 0 with enqueue seqs continuing the job's
-        dense numbering, hashes re-marked seen, and the cumulative filter
-        re-inserted — the other half of the cuckoo delete/insert round
-        trip. `run(cfg, resume=True)` then fetches them (the admission
-        limit still applies: pass a limit above the job's done count)."""
-        spark = self.spark
+        dense numbering, and every hash not already seen re-inserted into
+        the exact set and the cumulative filter — the other half of the
+        cuckoo delete/insert round trip. `run(cfg, resume=True)` then
+        fetches all of them (the admission limit still applies: pass a
+        limit above the job's done count)."""
         progress = self._progress()
         if progress["round"] < 0:
             raise ValueError("no committed crawl state to enqueue into")
@@ -553,6 +546,7 @@ class CrawlEngine:
         r = progress["round"] + 1
         fam = cfg.filter_family()
         self._check_geometry(fam)
+        self._load_seen(fam, progress["round"])
         rows = self._canonical_rows(cfg, urls)
         base = progress["enqueued"]
         cols = {
@@ -569,22 +563,15 @@ class CrawlEngine:
         }
         self.catalog.append_round_local(
             pa.table(cols, schema=FRONTIER_PA_SCHEMA), "pending", r)
-        hashes = [row["url_hash"] for row in rows]
-        self._write_seen_driver(hashes, r)
-        prior = self._latest_bloom(spark, progress["round"])
-        cache = segments_to_driver(prior) if prior is not None else {}
-        self._write_filter_driver(
-            fam.merge_driver(cache, fam.build_driver(hashes)), r)
+        self._add_seen(fam, cols["url_hash"])
+        self._write_seen(r)
 
         meta = {**progress, "round": r, "finalized": False,
                 "enqueued": base + len(rows), "pending_next": len(rows),
                 "pending_seq_range": [base, max(base, base + len(rows) - 1)],
                 "phase": "recrawl_enqueued"}
-        # cumulative filter: retire the prior copy, like the round loop
         self.catalog.commit_round(r, ["pending", "seen", "bloom"], meta,
-                                  replace=["bloom"])
-        self._bloom_mem, self._bloom_mem_round = None, -1
-        self._pending_mem = None
+                                  replace=["seen", "bloom"])
         return meta
 
     # -- the round loop -----------------------------------------------------
@@ -727,7 +714,6 @@ class CrawlEngine:
         self._prev_inflight = None
         self._graveyard = []
         self._pending_mem = None
-        self._seen_uncommitted = []
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
@@ -754,10 +740,9 @@ class CrawlEngine:
         else:
             self.catalog.destroy()
             self.catalog = Catalog(self.catalog.root)
-            self._bloom_mem = None
-            self._bloom_mem_round = -1
             progress = {"round": -1, "done": 0, "failed": 0, "enqueued": 0, "finalized": False}
             round_no = 0
+        self._load_seen(fam, round_no - 1)
 
         if round_no == 0:
             frontier = self._seed_frontier(cfg)
@@ -773,16 +758,14 @@ class CrawlEngine:
                 pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
                          schema=FRONTIER_PA_SCHEMA),
                 "pending", 0)
-            hashes = [r["url_hash"] for r in rows]
-            self._write_seen_driver(hashes, 0)
-            self._bloom_mem = fam.build_driver(hashes)
-            self._bloom_mem_round = 0
-            self._write_filter_driver(self._bloom_mem, 0)
+            self._add_seen(fam, [r["url_hash"] for r in rows])
+            self._write_seen(0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
                         "pending_seq_range": [0, max(0, n_seed - 1)],
                         "bloom_geometry": fam.geometry}
-            self.catalog.commit_round(0, ["pending", "seen", "bloom"], progress)
+            self.catalog.commit_round(0, ["pending", "seen", "bloom"], progress,
+                                      replace=["seen", "bloom"])
             round_no = 1
 
         extract_udf = make_extract_udf(
@@ -836,8 +819,13 @@ class CrawlEngine:
                    else self.catalog.read_round(spark, "pending", r - 1,
                                                 schema=FRONTIER_SCHEMA))
 
+        # the round's path: a budget or batch defers rows, and deferred or
+        # retried rows carry over into the next round's pending
+        limited = bool(cfg.politeness_budget or cfg.batch_size)
+        carry_over = limited or cfg.max_attempts > 1
+
         # --- politeness: per-host budget window (the host shuffle) ---------
-        if not cfg.politeness_budget and not cfg.batch_size:
+        if not limited:
             # unlimited budget: all pending admitted; a schema-only empty
             # frame (no lineage back into pending) keeps the deferred branch
             # out of the next round's write plans entirely. range(0) keeps
@@ -855,7 +843,7 @@ class CrawlEngine:
             admitted, deferred = apply_host_budget(
                 pending, cfg.politeness_budget, order_cols=("depth", "seq"),
                 salt_n=cfg.budget_salt_n, scope=cfg.budget_scope)
-        if cfg.batch_size and cfg.batch_size > 0:
+        if cfg.batch_size:
             # coordinator batch semantics (crawlCoordinator.ts:33-38): take
             # the first batch_size rows in FIFO (seq) order
             batch = admitted.orderBy("seq").limit(cfg.batch_size)
@@ -866,8 +854,7 @@ class CrawlEngine:
         # which is cached itself — an extra cache would just serialize the
         # frontier twice. Budget/batch rounds reference admitted from
         # several branches, so cache it there.
-        admitted_cached = bool(cfg.politeness_budget or cfg.batch_size)
-        if admitted_cached:
+        if limited:
             admitted = admitted.cache()
 
         # --- fetch = equi-join against the corpus --------------------------
@@ -981,11 +968,9 @@ class CrawlEngine:
                 .select(*ex["dedup_sel"])
             )
 
-            # seen filter: Bloom pre-filter + exact anti-join. Each bloom
-            # round checkpoint is CUMULATIVE (delta OR-merged into the prior
-            # round's segments at write time), so reading the seen-filter is
-            # one round directory — O(1) per round, not O(rounds) re-merges.
-            seen = self._read_seen(spark, r - 1)
+            # seen filter: Bloom pre-filter + exact anti-join against the
+            # driver-resident seen state — the filter dict and the one seen
+            # directory it was last written to.
             # The probabilistic pre-filter earns its keep only once the
             # seen set is large: below prefilter_min_seen hashes the exact
             # anti-join alone is measurably cheaper per round than the
@@ -995,19 +980,13 @@ class CrawlEngine:
             # primed and maintained every round — checkpoints and resume
             # geometry are untouched; this gates only the physical plan,
             # never membership results.
-            if self._bloom_mem is None or self._bloom_mem_round != r - 1:
-                seg_df = self._latest_bloom(spark, up_to_round=r - 1)
-                if seg_df is not None:
-                    self._bloom_mem = segments_to_driver(seg_df)
-                    self._bloom_mem_round = r - 1
             if progress["enqueued"] > cfg.prefilter_min_seen:
                 # driver-resident filter: hand the dict straight to the
                 # probe (broadcast once per executor) — no per-row bitmap
-                # column, no createDataFrame scan per round. No segments
-                # (missing checkpoint) degrades to the exact anti-join.
-                links = fam.filter_new(links, self._bloom_mem, seen)
-            elif seen is not None:
-                links = exact_antijoin(links, seen)
+                # column, no createDataFrame scan per round.
+                links = fam.filter_new(links, self._bloom_mem, self._seen_df)
+            else:
+                links = exact_antijoin(links, self._seen_df)
 
             n_buckets = 4 * spark.sparkContext.defaultParallelism
 
@@ -1166,9 +1145,8 @@ class CrawlEngine:
                 .select(*FRONTIER_COLS)
             )
             next_pending = next_pending.unionByName(retries)
-        if new_rows is not None and n_new > 0:
-            if not cfg.politeness_budget and not cfg.batch_size \
-                    and cfg.max_attempts == 1:
+        if n_new > 0:
+            if not carry_over:
                 # deferred is the schema-only empty frame here — skip the
                 # union so next round's admitted is the cached new_rows
                 # frame itself (depth-1 lineage for the pipelined pending)
@@ -1181,60 +1159,18 @@ class CrawlEngine:
         # retries): with budgets/batches the deferred branch chains through
         # every prior round's frontier, so cut lineage by waiting for the
         # parquet write and reading it back (commit still deferred).
-        pipeline_pending = (not cfg.politeness_budget and not cfg.batch_size
-                            and cfg.max_attempts == 1)
-        if not pipeline_pending:
+        if carry_over:
             state_writes[0].result()
             next_pending = spark.read.schema(FRONTIER_SCHEMA).parquet(
                 self.catalog.round_path("pending", r))
-        compact_seen = False
         if n_new > 0:
-            # seen compaction: the seen read unions every committed round's
-            # directory, so an unbounded crawl pays O(rounds) listing/open
-            # cost per round. Every K seen-writing rounds this round's write
-            # holds the full cumulative hash set instead of the delta and
-            # the manifest swap (atomic with the round commit) replaces the
-            # delta chain — read cost stays O(1) directories. The Iceberg
-            # deployment equivalent is snapshot compaction.
-            compact_seen = (
-                cfg.seen_compact_every > 0 and seen is not None
-                and len(self.catalog.committed_rounds("seen"))
-                + len(self._seen_uncommitted)
-                >= cfg.seen_compact_every)
-            if compact_seen:
-                # synchronous: the NEXT round's anti-join reads this file
-                # before its manifest commit lands (write pipelining)
-                self.catalog.append_round(
-                    seen.unionByName(new_rows.select("url_hash")), "seen", r)
-                self._seen_uncommitted.append(
-                    (r, self.catalog.round_path("seen", r), True))
-            # incremental checkpoint: merge this round's delta into the
-            # driver-resident cumulative filter ONCE, write it as round r.
-            # The per-round delta is bounded by the job's enqueue limit, so
-            # the new hashes are collected once, the delta is built/merged
-            # in numpy, and BOTH the seen delta and the cumulative filter
-            # are written with pyarrow on the driver — one collect instead
-            # of three Spark jobs (segment build, seen write, bloom write).
-            hashes = [row["url_hash"]
-                      for row in new_rows.select("url_hash").collect()]
-            if not compact_seen:
-                self._write_seen_driver(hashes, r)
-                self._seen_uncommitted.append(
-                    (r, self.catalog.round_path("seen", r), False))
-            build_hashes = hashes
-            if self._bloom_mem is None and seen is not None:
-                # prior bloom checkpoint missing/corrupt (filter_new
-                # degraded to the exact anti-join): REBUILD the cumulative
-                # filter from the seen history — committing a delta-only
-                # bitmap as 'cumulative' would bake in permanent false
-                # negatives for every pre-corruption URL. Bounded by the
-                # zod limit cap on enqueued rows.
-                build_hashes = hashes + [
-                    row["url_hash"]
-                    for row in seen.select("url_hash").collect()]
-            self._bloom_mem = fam.merge_driver(self._bloom_mem or {},
-                                               fam.build_driver(build_hashes))
-            self._write_filter_driver(self._bloom_mem, r)
+            # The round's new hashes are bounded by the job's enqueue limit:
+            # one collect, then the seen set and the cumulative filter are
+            # updated in memory and written with pyarrow on the driver — no
+            # Spark job for the segment build or either write.
+            self._add_seen(fam, [row["url_hash"] for row in
+                                 new_rows.select("url_hash").collect()])
+            self._write_seen(r)
         # next-pending count by arithmetic over aggregates this round already
         # computed — no re-read of the just-written files (which cost a
         # footer-scan Spark job per round):
@@ -1250,14 +1186,9 @@ class CrawlEngine:
         n_failed = sum(v for (s_, fin), v in outcome_counts.items()
                        if s_ != 200 and fin)
         n_admitted = sum(outcome_counts.values())
-        n_retries = 0
-        if cfg.max_attempts > 1:
-            n_retries = sum(v for (s_, fin), v in outcome_counts.items()
-                            if s_ != 200 and not fin)
+        n_retries = sum(v for (s_, fin), v in outcome_counts.items()
+                        if s_ != 200 and not fin)
         n_pending_next = (known_pending - n_admitted) + n_retries + n_new
-        if self._bloom_mem is not None:
-            # cumulative through this round whether or not a delta was added
-            self._bloom_mem_round = r
         _t_writes = time.time()
 
         done = progress["done"] + n_fetched + n_failed
@@ -1272,8 +1203,7 @@ class CrawlEngine:
         prev_rng = progress["pending_seq_range"]
         if n_new > 0:
             rng = [enqueued, enqueued + n_new - 1]
-            if (cfg.politeness_budget or cfg.batch_size
-                    or cfg.max_attempts > 1):
+            if carry_over:
                 rng = [min(prev_rng[0], rng[0]), max(prev_rng[1], rng[1])]
         else:
             rng = prev_rng
@@ -1302,21 +1232,18 @@ class CrawlEngine:
             },
         }
         tables = ["pending", "results", "visits", "metrics"]
-        # every bloom checkpoint is the full cumulative filter and only the
-        # newest committed round is ever read (_latest_bloom), so each commit
-        # retires the previous copy — otherwise an unbounded crawl stores
-        # O(rounds) superseded full-filter copies
-        replace = ["bloom"] if n_new > 0 else []
+        # the seen and bloom writes each hold the full cumulative state, so
+        # their commit retires the previous copies (_write_seen)
+        replace = []
         if n_new > 0:
             tables += ["seen", "bloom"]
-        if compact_seen:
-            replace.append("seen")
+            replace = ["seen", "bloom"]
         # Deferred commit (write pipelining): the manifest entry lands in
         # _finalize_prev() during the NEXT round, after the writes complete.
         # A crash before that resumes from the last committed round with
         # this round's directories dropped — exact-resume is unchanged.
         caches_now = [docs]
-        if admitted_cached:
+        if limited:
             caches_now.append(admitted)
         self._prev_inflight = {
             "round": r, "futures": pending_writes + state_writes,

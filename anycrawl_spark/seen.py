@@ -188,11 +188,13 @@ def exact_antijoin(candidates: DataFrame, seen_exact: DataFrame,
     """Rows of ``candidates`` not in the exact seen-hash history.
 
     No ``distinct()`` on the seen side: a left-anti equi-join returns the
-    same rows whether or not the right side holds duplicates, the seen
-    checkpoint is unique by construction (each round's delta is new-only
-    hashes), and the dedup cost was real — a full exchange plus two
-    HashAggregate passes over the whole standing seen set EVERY round,
-    two extra stage barriers ahead of the (auto-broadcast) join build.
+    same rows whether or not the right side holds duplicates, and the
+    crawl engine's seen checkpoint holds each hash once anyway — it is the
+    driver-resident exact set (a Python set, written sorted), and only
+    hashes not already in it are ever added. The dedup cost was real — a
+    full exchange plus two HashAggregate passes over the whole standing
+    seen set EVERY round, two extra stage barriers ahead of the
+    (auto-broadcast) join build.
     """
     return candidates.join(
         seen_exact.select(F.col(url_hash_col).alias("__seen_hash")),

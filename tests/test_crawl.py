@@ -173,6 +173,23 @@ def assert_resumable_metas(catalog):
     return phases
 
 
+def assert_one_seen_round(spark, engine):
+    """The seen and bloom tables each have exactly one committed round
+    directory, which is also the only one on disk, and the seen rows are
+    unique. Returns the seen hash set."""
+    import glob
+
+    for table in ("seen", "bloom"):
+        rounds = engine.catalog.committed_rounds(table)
+        assert len(rounds) == 1, (table, rounds)
+        on_disk = {int(p.rsplit("=", 1)[1]) for p in glob.glob(
+            os.path.join(engine.catalog.root, table, "round=*"))}
+        assert on_disk == set(rounds), (table, on_disk, rounds)
+    rows = [r["url_hash"] for r in engine.catalog.read(spark, "seen").collect()]
+    assert len(rows) == len(set(rows))
+    return set(rows)
+
+
 class TestResume:
     def test_resumable_metas_carry_pending_counts(self, spark, small_corpus,
                                                   tmp_root):
@@ -227,51 +244,84 @@ class TestResume:
         assert resumed_results == full_results
 
 
-class TestSeenCompaction:
-    def test_compaction_preserves_crawl_and_bounds_dirs(self, spark, small_corpus,
-                                                        tmp_root):
-        """seen_compact_every=2 must crawl identically to the uncompacted
-        run, keep the seen table content equal, and bound the number of
-        committed seen round directories; resume across a compaction point
-        stays exact."""
+    def test_resume_rebuilds_lost_filter(self, spark, small_corpus,
+                                         tmp_root):
+        """A checkpoint whose manifest lost its bloom entry resumes exactly:
+        the filter is rebuilt from the exact seen set, so the next
+        committed filter equals a fresh build over the committed seen
+        set."""
+        import json
+
+        from anycrawl_spark.seen import segments_to_driver
+
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
+                  limit=40, respect_robots=False)
+        full = CrawlEngine(spark, small_corpus,
+                           os.path.join(tmp_root, "lost_bloom_full"))
+        full.run(CrawlConfig(job_id="lb", **kw))
+
+        part_dir = os.path.join(tmp_root, "lost_bloom_part")
+        CrawlEngine(spark, small_corpus, part_dir).run(
+            CrawlConfig(job_id="lb", max_rounds=2, **kw))
+        mpath = os.path.join(part_dir, "_manifest.json")
+        with open(mpath) as f:
+            manifest = json.load(f)
+        del manifest["tables"]["bloom"]
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+
+        resumed = CrawlEngine(spark, small_corpus, part_dir)
+        resumed.run(CrawlConfig(job_id="lb", max_rounds=3, **kw), resume=True)
+        assert resumed.catalog.committed_rounds("bloom") == [3]
+        seen = assert_one_seen_round(spark, resumed)
+        fam = CrawlConfig(job_id="lb", **kw).filter_family()
+        assert (segments_to_driver(resumed._latest_bloom(spark, 3))
+                == fam.build_driver(seen))
+
+        resumed.run(CrawlConfig(job_id="lb", **kw), resume=True)
+        assert ([(r["seq"], r["url"], r["depth"], r["status"])
+                 for r in resumed.visit_order().collect()]
+                == [(r["seq"], r["url"], r["depth"], r["status"])
+                    for r in full.visit_order().collect()])
+        assert (assert_one_seen_round(spark, resumed)
+                == assert_one_seen_round(spark, full))
+
+
+class TestSeenCheckpoint:
+    def test_one_unique_seen_round_and_exact_resume(self, spark, small_corpus,
+                                                    tmp_root):
+        """After a crawl, an eviction and a re-enqueue, the seen table is
+        one committed directory of unique hashes holding the full seen
+        set, and a stop after 3 rounds plus a resume reproduces the
+        uninterrupted visit order and seen set."""
         kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=6,
                   limit=40, respect_robots=False)
+        cfg = CrawlConfig(job_id="sk", **kw)
 
-        plain_dir = os.path.join(tmp_root, "seen_plain")
-        plain = CrawlEngine(spark, small_corpus, plain_dir)
-        plain.run(CrawlConfig(job_id="sc", seen_compact_every=0, **kw))
-        plain_visits = [(r["seq"], r["url"]) for r in plain.visit_order().collect()]
-        plain_seen = {r["url_hash"] for r in
-                      plain.catalog.read(spark, "seen").collect()}
+        full = CrawlEngine(spark, small_corpus,
+                           os.path.join(tmp_root, "seen_full"))
+        s1 = full.run(cfg)
+        full_visits = [(r["seq"], r["url"]) for r in full.visit_order().collect()]
+        full_seen = assert_one_seen_round(spark, full)
+        assert len(full_seen) == s1["enqueued"]
 
-        comp_dir = os.path.join(tmp_root, "seen_comp")
-        comp = CrawlEngine(spark, small_corpus, comp_dir)
-        comp.run(CrawlConfig(job_id="sc", seen_compact_every=2, **kw))
-        comp_visits = [(r["seq"], r["url"]) for r in comp.visit_order().collect()]
-        comp_seen = {r["url_hash"] for r in
-                     comp.catalog.read(spark, "seen").collect()}
-
-        assert comp_visits == plain_visits
-        assert comp_seen == plain_seen
-        assert (len(comp.catalog.committed_rounds("seen"))
-                <= 3 < len(plain.catalog.committed_rounds("seen")))
-        # superseded delta directories were physically removed
-        import glob as _glob
-
-        on_disk = {int(p.rsplit("=", 1)[1]) for p in
-                   _glob.glob(os.path.join(comp_dir, "seen", "round=*"))}
-        assert on_disk == set(comp.catalog.committed_rounds("seen"))
-
-        # resume across a compaction boundary reproduces the full crawl
-        part_dir = os.path.join(tmp_root, "seen_comp_part")
+        part_dir = os.path.join(tmp_root, "seen_part")
         part = CrawlEngine(spark, small_corpus, part_dir)
-        part.run(CrawlConfig(job_id="sc", seen_compact_every=2, max_rounds=3, **kw))
+        part.run(CrawlConfig(job_id="sk", max_rounds=3, **kw))
+        assert part.catalog.last_round() == 3
+        assert_one_seen_round(spark, part)
         resumed = CrawlEngine(spark, small_corpus, part_dir)
-        resumed.run(CrawlConfig(job_id="sc", seen_compact_every=2, **kw),
-                    resume=True)
-        resumed_visits = [(r["seq"], r["url"])
-                          for r in resumed.visit_order().collect()]
-        assert resumed_visits == plain_visits
+        resumed.run(cfg, resume=True)
+        assert ([(r["seq"], r["url"]) for r in resumed.visit_order().collect()]
+                == full_visits)
+        assert assert_one_seen_round(spark, resumed) == full_seen
+
+        victims = sorted(v["url"] for v in full.visits().collect()
+                         if v["status"] == 200)[:2]
+        full.evict_urls(cfg, victims)
+        assert len(assert_one_seen_round(spark, full)) == len(full_seen) - 2
+        full.reenqueue_urls(cfg, victims)
+        assert assert_one_seen_round(spark, full) == full_seen
 
 
 class TestExtractionParity:
@@ -643,34 +693,10 @@ class TestCorpusDedup:
 
 
 class TestPipelinedCheckpointing:
-    """Regression tests for the round-4 write pipelining: deferred commits,
-    back-to-back seen compaction over in-flight files, and resume from a
-    checkpoint whose newest round's writes landed but whose manifest commit
-    never did (the crash window pipelining introduces)."""
-
-    def test_compact_every_round_matches_default(self, spark, small_corpus, tmp_root):
-        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
-                  limit=40, respect_robots=False)
-
-        base_dir = os.path.join(tmp_root, "pc_base")
-        engine_base = CrawlEngine(spark, small_corpus, base_dir)
-        engine_base.run(CrawlConfig(job_id="pc", **kw))
-        base_visits = [(r["seq"], r["url"]) for r in
-                       engine_base.visit_order().collect()]
-
-        # seen_compact_every=1: every seen-writing round compacts; the
-        # compaction write reads the PREVIOUS round's uncommitted compacted
-        # file after the prior commit deleted the superseded delta dirs —
-        # this crashed with FileNotFound before _read_seen learned to drop
-        # superseded rounds from the plan.
-        c_dir = os.path.join(tmp_root, "pc_compact1")
-        engine_c = CrawlEngine(spark, small_corpus, c_dir)
-        engine_c.run(CrawlConfig(job_id="pc", seen_compact_every=1, **kw))
-        c_visits = [(r["seq"], r["url"]) for r in
-                    engine_c.visit_order().collect()]
-        assert c_visits == base_visits
-        # compaction keeps the committed seen table at one directory
-        assert len(engine_c.catalog.committed_rounds("seen")) == 1
+    """Regression tests for the round-4 write pipelining: deferred commits
+    and resume from a checkpoint whose newest round's writes landed but
+    whose manifest commit never did (the crash window pipelining
+    introduces)."""
 
     def test_resume_after_uncommitted_tail(self, spark, small_corpus, tmp_root):
         import json
@@ -816,6 +842,38 @@ class TestRecrawlEviction:
         seen_after = {r["url_hash"] for r in eng.catalog.read(
             spark, "seen").select("url_hash").collect()}
         assert victim_hashes <= seen_after
+
+    def test_reenqueue_of_seen_url_keeps_seen_unique(self, spark, small_corpus,
+                                                     tmp_root):
+        """Re-enqueuing a URL that was never evicted fetches it again but
+        leaves the seen state as it was: no second seen row for its hash
+        and no second cuckoo fingerprint copy of its key."""
+        from anycrawl_spark.seen import segments_to_driver
+
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=2,
+                  limit=8, respect_robots=False, seen_filter="cuckoo")
+        eng = CrawlEngine(spark, small_corpus,
+                          os.path.join(tmp_root, "reenqueue_seen"))
+        s1 = eng.run(CrawlConfig(job_id="ru", **kw))
+        prior = sorted(r["url_hash"] for r in
+                       eng.catalog.read(spark, "seen").collect())
+        prior_filter = segments_to_driver(
+            eng._latest_bloom(spark, eng.catalog.last_round()))
+        url = sorted(v["url"] for v in eng.visits().collect()
+                     if v["status"] == 200)[:1]
+
+        meta = eng.reenqueue_urls(CrawlConfig(job_id="ru", **kw), url)
+        assert meta["pending_next"] == 1
+        assert sorted(r["url_hash"] for r in
+                      eng.catalog.read(spark, "seen").collect()) == prior
+        assert segments_to_driver(
+            eng._latest_bloom(spark, meta["round"])) == prior_filter
+
+        s2 = eng.run(CrawlConfig(job_id="ru", **{**kw, "limit": 9}),
+                     resume=True)
+        assert s2["done"] == s1["done"] + 1
+        assert sorted(r["url_hash"] for r in
+                      eng.catalog.read(spark, "seen").collect()) == prior
 
     def test_recrawl_meta_carries_pending_counts(self, spark, small_corpus,
                                                  tmp_root):
