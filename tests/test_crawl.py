@@ -287,13 +287,47 @@ class TestResume:
                 == assert_one_seen_round(spark, full))
 
 
+class TestSeenCompaction:
+    def test_compaction_preserves_crawl_and_bounds_dirs(self, spark, small_corpus,
+                                                        corpus_dict, tmp_root):
+        """Every seen-writing round rewrites the seen set as one compacted
+        directory: the crawl equals the simulator's (visit order and seen
+        set), the committed seen and bloom tables are bounded at one
+        directory each with no superseded directory left on disk, and a
+        resume across a rewrite point stays exact."""
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=6,
+                  limit=40, respect_robots=False)
+        cfg = CrawlConfig(job_id="sc", **kw)
+        sim = simulate_crawl(corpus_dict, SEED, strategy="same-hostname",
+                             max_depth=6, limit=40)
+
+        full = CrawlEngine(spark, small_corpus,
+                           os.path.join(tmp_root, "seen_comp"))
+        full.run(cfg)
+        full_visits = [(r["seq"], r["url"], r["depth"], r["status"])
+                       for r in full.visit_order().collect()]
+        full_seen = assert_one_seen_round(spark, full)
+        assert_parity(spark, full_visits, full_seen, sim)
+
+        # stop after 3 rounds (each rewrote the seen directory), then resume
+        part_dir = os.path.join(tmp_root, "seen_comp_part")
+        part = CrawlEngine(spark, small_corpus, part_dir)
+        part.run(CrawlConfig(job_id="sc", max_rounds=3, **kw))
+        assert part.catalog.last_round() == 3
+        assert_one_seen_round(spark, part)
+        resumed = CrawlEngine(spark, small_corpus, part_dir)
+        resumed.run(cfg, resume=True)
+        assert ([(r["seq"], r["url"], r["depth"], r["status"])
+                 for r in resumed.visit_order().collect()] == full_visits)
+        assert assert_one_seen_round(spark, resumed) == full_seen
+
+
 class TestSeenCheckpoint:
-    def test_one_unique_seen_round_and_exact_resume(self, spark, small_corpus,
-                                                    tmp_root):
+    def test_one_unique_seen_round_after_evict_and_reenqueue(
+            self, spark, small_corpus, tmp_root):
         """After a crawl, an eviction and a re-enqueue, the seen table is
         one committed directory of unique hashes holding the full seen
-        set, and a stop after 3 rounds plus a resume reproduces the
-        uninterrupted visit order and seen set."""
+        set."""
         kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=6,
                   limit=40, respect_robots=False)
         cfg = CrawlConfig(job_id="sk", **kw)
@@ -301,20 +335,8 @@ class TestSeenCheckpoint:
         full = CrawlEngine(spark, small_corpus,
                            os.path.join(tmp_root, "seen_full"))
         s1 = full.run(cfg)
-        full_visits = [(r["seq"], r["url"]) for r in full.visit_order().collect()]
         full_seen = assert_one_seen_round(spark, full)
         assert len(full_seen) == s1["enqueued"]
-
-        part_dir = os.path.join(tmp_root, "seen_part")
-        part = CrawlEngine(spark, small_corpus, part_dir)
-        part.run(CrawlConfig(job_id="sk", max_rounds=3, **kw))
-        assert part.catalog.last_round() == 3
-        assert_one_seen_round(spark, part)
-        resumed = CrawlEngine(spark, small_corpus, part_dir)
-        resumed.run(cfg, resume=True)
-        assert ([(r["seq"], r["url"]) for r in resumed.visit_order().collect()]
-                == full_visits)
-        assert assert_one_seen_round(spark, resumed) == full_seen
 
         victims = sorted(v["url"] for v in full.visits().collect()
                          if v["status"] == 200)[:2]
@@ -693,10 +715,31 @@ class TestCorpusDedup:
 
 
 class TestPipelinedCheckpointing:
-    """Regression tests for the round-4 write pipelining: deferred commits
-    and resume from a checkpoint whose newest round's writes landed but
+    """Regression tests for the round-4 write pipelining: deferred commits,
+    the per-round seen rewrite over in-flight files, and resume from a checkpoint whose newest round's writes landed but
     whose manifest commit never did (the crash window pipelining
     introduces)."""
+
+    def test_compact_every_round_matches_default(self, spark, small_corpus,
+                                                 corpus_dict, tmp_root):
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=5,
+                  limit=40, respect_robots=False)
+        sim = simulate_crawl(corpus_dict, SEED, strategy="same-hostname",
+                             max_depth=5, limit=40)
+
+        # every round rewrites the seen set as one new directory, and each
+        # deferred commit deletes the superseded one while the next round's
+        # anti-join reads the newest — a plan that still listed a
+        # superseded round crashed with FileNotFound.
+        c_dir = os.path.join(tmp_root, "pc_compact1")
+        engine_c = CrawlEngine(spark, small_corpus, c_dir)
+        engine_c.run(CrawlConfig(job_id="pc", **kw))
+        c_visits = [(r["seq"], r["url"], r["depth"], r["status"]) for r in
+                    engine_c.visit_order().collect()]
+        assert c_visits == sim_visits(sim)
+        # the committed seen table stays at one directory
+        assert len(engine_c.catalog.committed_rounds("seen")) == 1
+        assert_one_seen_round(spark, engine_c)
 
     def test_resume_after_uncommitted_tail(self, spark, small_corpus, tmp_root):
         import json
