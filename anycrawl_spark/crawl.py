@@ -1,18 +1,23 @@
 """The crawl engine: frontier + fetch-join + extraction rounds on Spark
 (SURVEY.md §3.2 — the flagship path, re-expressed as batch micro-iterations).
 
-Each round r is one Spark batch over immutable checkpointed state:
+Each round r is one Spark batch over a driver-resident frontier (a pyarrow
+table — a job's limit caps it at 50,000 enqueued URLs):
 
-    pending_r  →  per-host budget window (politeness shuffle by host)
-               →  fetch = broadcast-free equi-join against the pages corpus
-                  on url_hash (partition-prunable at scale)
+    pending_r  →  admission on the driver: per-host (or per-domain) budget
+                  top-k by (depth, seq), then the batch_size cut
+               →  admitted rows enter Spark as an Arrow table (JVM-only)
+               →  fetch = equi-join against the pages corpus on url_hash
+                  (corpus semi-reduced by a broadcast of the admitted keys;
+                  partition-prunable at scale)
                →  vectorized extraction UDF (T1-T20)
                →  results_r append (scrape_paths-gated persistence)
                →  posexplode(links) → canonicalize (JVM expr) → strategy /
                   path / depth / robots filters → in-batch dedup
                →  Bloom pre-filter + exact anti-join vs seen set
-               →  enqueue-cap top-k → seq assignment → pending_{r+1}
-               →  cumulative seen set + filter rewritten, progress and
+               →  enqueue-cap top-k collected; seqs numbered on the driver
+               →  pending_{r+1} = deferred + retries + new rows, cumulative
+                  seen set + filter rewritten with pyarrow, progress and
                   per-partition lineage appended;
                   manifest commit (atomic) → resumable
 
@@ -45,11 +50,16 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .catalog import Catalog
 from .errors import failure_reason_col, should_retry_col
-from .politeness import (
+# apply_host_budget, the DataFrame form of admit_frontier, is imported for
+# callers that look it up on this module: perfbench's tracer wraps it here
+from .politeness import (  # noqa: F401
+    admit_frontier,
     apply_host_budget,
     path_filter_cond,
     robots_allowed,
@@ -64,11 +74,6 @@ from .seen import (
 )
 from .udfs import make_extract_udf
 
-FRONTIER_COLS = ["job_id", "url", "url_hash", "host", "origin", "path",
-                 "depth", "seq", "round_added", "attempt"]
-FRONTIER_SCHEMA = ("job_id string, url string, url_hash string, host string, "
-                   "origin string, path string, depth int, seq long, "
-                   "round_added int, attempt int")
 FRONTIER_PA_SCHEMA = pa.schema([
     ("job_id", pa.string()), ("url", pa.string()),
     ("url_hash", pa.string()), ("host", pa.string()),
@@ -95,10 +100,12 @@ class CrawlConfig:
     politeness_budget: int = 0           # fetches per budget key per round; 0 = unlimited
     budget_scope: str = "host"           # 'host' or 'domain' (registrable) —
                                          # north rule: per-DOMAIN politeness
-    budget_salt_n: int = 0               # >1: two-stage salted per-host top-k (hot
-                                         # hosts); 0: plain window (measured: salting
-                                         # loses below ~10k rows/round — SCALING.json
-                                         # skew_probe_bfs — and wins at 2M — skew_probe)
+    budget_salt_n: int = 0               # accepted and validated for callers
+                                         # that pass it (bench.py), but it does
+                                         # not change the crawl plan: admission
+                                         # runs on the driver
+                                         # (politeness.admit_frontier); the salted
+                                         # two-stage window is apply_host_budget's
     max_attempts: int = 1                # fetch retries (Queue.ts:84-89 attempts=3)
     batch_size: int = 0                  # rows fetched per round; 0 = whole round
     respect_robots: bool = True          # --anycrawl-compat off ⇒ True (north rule)
@@ -293,17 +300,18 @@ class CrawlEngine:
         self._seen: set[str] | None = None
         self._bloom_mem: dict[int, bytes] | None = None
         self._seen_df: DataFrame | None = None
+        # the pending frontier, bounded like the seen set: a pyarrow table
+        # (FRONTIER_PA_SCHEMA) the round admits from on the driver
+        self._frontier: pa.Table | None = None
         # -- write pipelining (see _finalize_prev) --------------------------
-        # The slow per-round parquet writes (results/visits/metrics/pending)
+        # The Spark writes of a round's docs (results/visits/metrics)
         # overlap the NEXT round's compute jobs: round r submits them async
-        # and round r+1 finalizes (await -> commit -> release caches) right
-        # before submitting its own writes. Next-round reads come from
-        # in-memory state instead of committed files: _pending_mem (the
-        # frontier DataFrame) and the seen state above, whose directory is
-        # written synchronously ahead of its deferred commit.
+        # and round r+1 finalizes (await -> commit -> release the docs
+        # cache) right before writing its own state. The next round reads
+        # in-memory state instead of committed files: the frontier and the
+        # seen state above, whose directories are written synchronously
+        # with pyarrow ahead of their deferred commit.
         self._prev_inflight: dict | None = None
-        self._graveyard: list = []      # caches from two rounds back
-        self._pending_mem: DataFrame | None = None
         self._writes: ThreadPoolExecutor | None = None
 
     # -- state helpers ------------------------------------------------------
@@ -329,38 +337,21 @@ class CrawlEngine:
 
     def _finalize_prev(self) -> None:
         """Complete the previous round's deferred tail: await its parquet
-        writes, commit its manifest entry, then release the caches retired
-        two rounds back (the previous round's in-flight writes may still
-        reference last round's cached frames through deferred/retry
-        lineage, so each round's caches live exactly one extra round)."""
+        writes, commit its manifest entry, and release its docs cache,
+        which only those writes read — also when a write or the commit
+        fails, so the Spark session doesn't leak the persisted frame."""
         prev = self._prev_inflight
         self._prev_inflight = None
-        if prev is not None:
-            try:
-                for fut in prev["futures"]:
-                    fut.result()
-                self.catalog.commit_round(prev["round"], prev["tables"],
-                                          prev["meta"],
-                                          replace=prev["replace"] or None)
-            except BaseException:
-                # a failed write/commit aborts the run — release EVERY
-                # cached frame (this round's, the deferred tail's, and the
-                # graveyard's) so the Spark session doesn't leak persisted
-                # DataFrames past the failure
-                for df in (prev["caches_now"] + prev["caches_later"]
-                           + self._graveyard):
-                    df.unpersist()
-                self._graveyard = []
-                raise
-            # docs/admitted are only read by the just-awaited writes —
-            # release them now (the payload-heavy frames). new_rows backs
-            # the in-memory pending the CURRENT round's in-flight writes
-            # still read, so it waits one more finalize in the graveyard.
-            for df in prev["caches_now"]:
-                df.unpersist()
-        for df in self._graveyard:
-            df.unpersist()
-        self._graveyard = prev["caches_later"] if prev is not None else []
+        if prev is None:
+            return
+        try:
+            for fut in prev["futures"]:
+                fut.result()
+            self.catalog.commit_round(prev["round"], prev["tables"],
+                                      prev["meta"],
+                                      replace=prev["replace"] or None)
+        finally:
+            prev["docs"].unpersist()
 
     # -- cancellation (Progress.ts:434-448) ---------------------------------
     # A marker file in the checkpoint root, so any process holding the
@@ -394,7 +385,7 @@ class CrawlEngine:
             F.lit(0).cast("int").alias("round_added"),
             F.lit(1).cast("int").alias("attempt"),
         )
-        return _canonical_cols(seed, "url").select(*FRONTIER_COLS)
+        return _canonical_cols(seed, "url").select(*FRONTIER_PA_SCHEMA.names)
 
     # -- TTL eviction / monitor recrawl --------------------------------------
     # Deployment story (cuckoo.py module docstring): when a page-cache entry
@@ -421,10 +412,12 @@ class CrawlEngine:
                 f"checkpoint has {fp}, config asks {fam.geometry}")
 
     def _canonical_rows(self, cfg: CrawlConfig, urls: list[str]) -> list:
-        frontier = _canonical_cols(
-            self.spark.createDataFrame([(cfg.job_id, u) for u in urls],
-                                       schema="job_id string, url string"),
-            "url")
+        # an Arrow-table source is JVM-only; local Python tuples would make a
+        # pickled RDD whose scan starts Python workers (see _seed_frontier)
+        src = pa.table({"job_id": [cfg.job_id] * len(urls), "url": list(urls)},
+                       schema=pa.schema([("job_id", pa.string()),
+                                         ("url", pa.string())]))
+        frontier = _canonical_cols(self.spark.createDataFrame(src), "url")
         rows, seen_h = [], set()
         for row in frontier.collect():           # a monitor batch is small
             if row["url_hash"] not in seen_h:
@@ -584,8 +577,7 @@ class CrawlEngine:
         classifier tree, the link filters). Column objects are immutable
         and reusable across DataFrames, so the loop now builds them here
         and re-uses them; only genuinely per-round literals (round number,
-        width-bucket bounds, enqueue offsets) are constructed inside
-        _run_round."""
+        enqueue capacity) are constructed inside _run_round."""
         ex: dict = {}
         ex["keys_sel"] = F.col("url_hash").alias("page_url_hash")
         if cfg.simulate_fetch_errors:
@@ -644,9 +636,7 @@ class CrawlEngine:
             # fail on their first attempt regardless of max_attempts
             final_attempt = final_attempt | ~should_retry_col(
                 F.col("error_message"))
-        ex["final_attempt"] = final_attempt
         ex["outcome_key"] = final_attempt.alias("final")
-        ex["outcome_aggs"] = [F.count("*").alias("count")]
         ex["metrics_key"] = F.spark_partition_id().alias("partition_id")
         ex["metrics_aggs"] = [
             F.count("*").alias("urls"),
@@ -680,17 +670,11 @@ class CrawlEngine:
             F.struct(F.col("parent_seq"), F.col("link_pos"))).alias("__first")
         ex["dedup_sel"] = [F.col("url_hash")] + [
             F.col(f"__first.{c}").alias(c) for c in link_cols]
-        w_local = Window.partitionBy("__bucket").orderBy(
-            "parent_seq", "link_pos")
-        ex["lrn"] = F.row_number().over(w_local).alias("__lrn")
-        ex["ranked_sel"] = [F.col(c) for c in
-                            ("job_id", "url", "url_hash", "host", "origin",
-                             "path", "parent_depth", "__bucket", "__lrn")]
-        ex["frontier_head"] = [F.col(c) for c in
-                               ("job_id", "url", "url_hash", "host",
-                                "origin", "path")]
-        ex["new_depth"] = (F.col("parent_depth") + 1).alias("depth")
-        ex["new_attempt"] = F.lit(1).alias("attempt")
+        # a new frontier row minus what the driver numbers (seq,
+        # round_added, attempt)
+        ex["new_sel"] = [F.col(c) for c in ("job_id", "url", "url_hash",
+                                            "host", "origin", "path")] + [
+            (F.col("parent_depth") + 1).alias("depth")]
         return ex
 
     @staticmethod
@@ -712,21 +696,17 @@ class CrawlEngine:
         # reset pipelining state: run() may be called again on one engine
         # (resume/cancel tests); in-memory state from a prior run is stale
         self._prev_inflight = None
-        self._graveyard = []
-        self._pending_mem = None
         self._writes = ThreadPoolExecutor(max_workers=8)
         try:
             return self._run_loop(cfg, resume, t0)
         finally:
             # flush the deferred tail even when resume validation / seeding
-            # throws: the last round's writes + commit, then every cache
-            # still parked in the graveyard chain; always release the
+            # throws: the last round's writes + commit; always release the
             # executor (a leaked pool accumulates 8 threads per failed call)
             try:
                 self._finalize_prev()
-                self._finalize_prev()
             finally:
-                self._pending_mem = None
+                self._frontier = None
                 self._writes.shutdown(wait=True)
                 self._writes = None
 
@@ -752,13 +732,12 @@ class CrawlEngine:
             # (already driver-built) — one collect replaces four Spark
             # jobs (count + pending/seen/bloom writes), shaving ~2 s of
             # fixed startup from every crawl job.
-            rows = frontier.collect()
-            n_seed = len(rows)
-            self.catalog.append_round_local(
-                pa.table({c: [r[c] for r in rows] for c in FRONTIER_COLS},
-                         schema=FRONTIER_PA_SCHEMA),
-                "pending", 0)
-            self._add_seen(fam, [r["url_hash"] for r in rows])
+            # (the select drops columns a robots rules table joins in)
+            self._frontier = frontier.select(
+                *FRONTIER_PA_SCHEMA.names).toArrow().cast(FRONTIER_PA_SCHEMA)
+            n_seed = self._frontier.num_rows
+            self.catalog.append_round_local(self._frontier, "pending", 0)
+            self._add_seen(fam, self._frontier["url_hash"].to_pylist())
             self._write_seen(0)
             progress = {"round": 0, "done": 0, "failed": 0, "enqueued": n_seed,
                         "finalized": n_seed == 0, "phase": "seeded",
@@ -767,6 +746,13 @@ class CrawlEngine:
             self.catalog.commit_round(0, ["pending", "seen", "bloom"], progress,
                                       replace=["seen", "bloom"])
             round_no = 1
+        elif not progress.get("finalized"):
+            # pyarrow reads the one-file round directories this engine
+            # writes and Spark's multi-part ones alike (it skips _SUCCESS
+            # and .crc files)
+            self._frontier = pq.read_table(
+                self.catalog.round_path("pending", round_no - 1),
+                schema=FRONTIER_PA_SCHEMA)
 
         extract_udf = make_extract_udf(
             formats=cfg.formats, only_main_content=cfg.only_main_content)
@@ -803,59 +789,22 @@ class CrawlEngine:
         spark = self.spark
         writes = self._writes
         _t0 = time.time()
-        # drain check: every meta a run resumes from counted its pending
-        # rows — crawl and recrawl_enqueued rounds as pending_next, the seed
-        # round as enqueued
-        known_pending = progress.get("pending_next", progress["enqueued"])
-        if known_pending == 0:
+        pending = self._frontier
+        if pending.num_rows == 0:
             self._finalize_prev()
             meta = {**progress, "round": r, "finalized": True, "phase": "drained"}
             self.catalog.commit_round(r, [], meta)
             return meta
-        # pending: the in-memory frontier from last round (write pipelining —
-        # its parquet write may still be in flight) or, on resume / first
-        # round, the committed checkpoint
-        pending = (self._pending_mem if self._pending_mem is not None
-                   else self.catalog.read_round(spark, "pending", r - 1,
-                                                schema=FRONTIER_SCHEMA))
 
-        # the round's path: a budget or batch defers rows, and deferred or
-        # retried rows carry over into the next round's pending
-        limited = bool(cfg.politeness_budget or cfg.batch_size)
-        carry_over = limited or cfg.max_attempts > 1
-
-        # --- politeness: per-host budget window (the host shuffle) ---------
-        if not limited:
-            # unlimited budget: all pending admitted; a schema-only empty
-            # frame (no lineage back into pending) keeps the deferred branch
-            # out of the next round's write plans entirely. range(0) keeps
-            # the empty source JVM-only (createDataFrame([]) is a pickled
-            # RDD that pulls in Python workers when scanned).
-            if "empty_pending" not in ex:
-                ex["empty_pending"] = [
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in pending.schema.fields]
-            admitted, deferred = pending, spark.range(0).select(
-                *ex["empty_pending"])
-        else:
-            # admission rows are salt-invariant: budget_salt_n changes the
-            # physical plan only, never crawl results
-            admitted, deferred = apply_host_budget(
-                pending, cfg.politeness_budget, order_cols=("depth", "seq"),
-                salt_n=cfg.budget_salt_n, scope=cfg.budget_scope)
-        if cfg.batch_size:
-            # coordinator batch semantics (crawlCoordinator.ts:33-38): take
-            # the first batch_size rows in FIFO (seq) order
-            batch = admitted.orderBy("seq").limit(cfg.batch_size)
-            deferred = pending.join(batch.select("url_hash"), "url_hash", "left_anti")
-            admitted = batch
-        # unlimited budget: admitted IS pending (often already a cached
-        # new_rows frame from last round) and feeds only the docs subtree,
-        # which is cached itself — an extra cache would just serialize the
-        # frontier twice. Budget/batch rounds reference admitted from
-        # several branches, so cache it there.
-        if limited:
-            admitted = admitted.cache()
+        # --- admission on the driver: per-host budget, then batch cut ------
+        # The frontier holds at most the job's limit (≤ 50k rows), so the
+        # per-host priority queue is a driver sort, not a host shuffle.
+        admitted, deferred = admit_frontier(
+            pending, cfg.politeness_budget, cfg.batch_size, cfg.budget_scope)
+        n_admitted = admitted.num_rows
+        # an Arrow-table source is JVM-only: the JVM parallelizes the
+        # batches, no Python worker starts (unlike local Python rows)
+        admitted_df = spark.createDataFrame(admitted)
 
         # --- fetch = equi-join against the corpus --------------------------
         # The join shuffle hash-partitions on url_hash; AQE parallelismFirst
@@ -874,15 +823,16 @@ class CrawlEngine:
         # the left side's keys changes nothing. The key set is bounded by
         # the job's limit (≤ 50k rows).
         corpus_side = self.corpus.join(
-            F.broadcast(admitted.select(ex["keys_sel"])),
+            F.broadcast(admitted_df.select(ex["keys_sel"])),
             "page_url_hash", "left_semi")
         # F11: a corpus miss carries an error message like a fetch error
-        # would (ex["error_msg"]; simulate_fetch_errors draws all five
+        # would (ex["fetch_derived"]; simulate_fetch_errors draws all five
         # failure classes deterministically from the url hash).
         fetched = (
-            admitted.join(corpus_side,
-                          admitted["url_hash"] == corpus_side["page_url_hash"],
-                          "left")
+            admitted_df.join(
+                corpus_side,
+                admitted_df["url_hash"] == corpus_side["page_url_hash"],
+                "left")
             .drop("page_url_hash")
         )
 
@@ -899,11 +849,11 @@ class CrawlEngine:
         # scheduling) dominates 64-row batches, and 50 tasks on 32 cores
         # measured slower than 32×100-row tasks on identical rows (0.78 s
         # vs 0.65 s for 3200 pages — tools/kernel_bench-style A/B).
-        # Driver-known count, deterministic; big rounds keep full width.
-        if known_pending <= 4096:
+        # Sized from the exact admitted count; big rounds keep full width.
+        if n_admitted <= 4096:
             fetched = fetched.repartition(
                 max(1, min(spark.sparkContext.defaultParallelism,
-                           (known_pending + 63) // 64)), "url_hash")
+                           (n_admitted + 63) // 64)), "url_hash")
         # --- extraction (vectorized UDF) -----------------------------------
         docs = (
             fetched.select("*", *ex["fetch_derived"])
@@ -916,34 +866,25 @@ class CrawlEngine:
         # UDF materializes at full parallelism (the cache also pins that
         # width — canChangeCachedPlanOutputPartitioning is off, so AQE
         # cannot byte-coalesce the compute-dense extract stage). But every
-        # CONSUMER job (results/visits writes, outcome counts) then paid 64
-        # task launches and wrote 64 splinter files per round regardless of
-        # round size — for a 100-row round that is pure scheduling overhead
-        # (measured ~0.55 s per job). Consumers therefore read a coalesced
-        # view sized from the driver-known round size (~1k rows/task);
-        # coalesce over the cached scan is a narrow op reading the same
-        # blocks, so the extraction work is not re-partitioned. The metrics
-        # aggregation stays on the full-width frame — its rows record
-        # spark_partition_id() lineage, which the view would renumber.
+        # CONSUMER job (results/visits writes, the outcome collect) then
+        # paid 64 task launches and wrote 64 splinter files per round
+        # regardless of round size — for a 100-row round that is pure
+        # scheduling overhead (measured ~0.55 s per job). Consumers
+        # therefore read a coalesced view sized from the admitted count
+        # (~1k rows/task); coalesce over the cached scan is a narrow op
+        # reading the same blocks, so the extraction work is not
+        # re-partitioned. The metrics aggregation stays on the full-width
+        # frame — its rows record spark_partition_id() lineage, which the
+        # view would renumber.
         n_view = max(1, min(spark.sparkContext.defaultParallelism,
-                            (known_pending + 999) // 1000))
+                            (n_admitted + 999) // 1000))
         docs_view = docs.coalesce(n_view)
 
-        final_attempt = ex["final_attempt"]
-
-        # --- discovery subtree construction (links → filters → seen) -------
-        # Built BEFORE the outcome job so its one materialization (the
-        # eager localCheckpoint in _build_ranked) can run CONCURRENTLY with
-        # the outcome counts: both evaluate the cached docs frame (block
-        # locks serialize per-partition compute), so wall time is ~max of
-        # the two jobs instead of their sum. The width_bucket bounds come
-        # from the prior round's recorded pending seq range (bounds only
-        # need to COVER the admitted parents' seqs — bucket boundaries
-        # don't affect the dense numbering, which orders by bucket then
-        # (parent_seq, link_pos)).
+        # --- discovery: links → filters → dedup → seen → enqueue cap -------
         enqueued = progress["enqueued"]
+        capacity = cfg.limit - enqueued
         disc_fut = None
-        if enqueued < cfg.limit:
+        if capacity > 0:
             links = (
                 docs.where(ex["status_200"])
                 .select(*ex["links_pre"])
@@ -988,64 +929,20 @@ class CrawlEngine:
             else:
                 links = exact_antijoin(links, self._seen_df)
 
-            n_buckets = 4 * spark.sparkContext.defaultParallelism
+            # enqueue cap: the first `capacity` new links in FIFO
+            # (parent_seq, link_pos) order. orderBy + limit plans as one
+            # TakeOrderedAndProject, so at most `capacity` rows reach the
+            # driver, which numbers them. Runs concurrently with the outcome
+            # collect and the doc writes (block-level cache locks make the
+            # shared docs materialization single-compute).
+            disc_fut = writes.submit(
+                links.orderBy("parent_seq", "link_pos").limit(capacity)
+                .select(*ex["new_sel"]).toArrow)
 
-            def disc_build(lo, hi, links=links, n_buckets=n_buckets):
-                # ONE evaluation of the discovery subtree: rank within
-                # bucket (needs no cross-bucket knowledge), eagerly
-                # localCheckpoint the ranked frame; counts and the capped
-                # new_rows both derive from the checkpointed blocks.
-                #
-                # localCheckpoint, NOT cache: the frontier delta is the
-                # round boundary — the next round's whole plan (and this
-                # round's in-flight writes) sit on top of it. A cache here
-                # nests InMemoryRelations round over round; unpersisting
-                # any mid-chain entry makes later plan lookups miss and
-                # re-derive the entire crawl history (measured: outcome-job
-                # task counts growing ~3x per round). Checkpointing
-                # truncates lineage to a LogicalRDD — no plan matching, no
-                # recompute path. Blocks are freed by the ContextCleaner
-                # once the graveyard drops the reference.
-                ranked_df = (
-                    links.select(
-                        "*",
-                        F.width_bucket(F.col("parent_seq"), F.lit(lo),
-                                       F.lit(hi + 1), F.lit(n_buckets))
-                        .alias("__bucket"))
-                    .select("*", ex["lrn"])
-                    .select(*ex["ranked_sel"])
-                )
-                # checkpoint the frontier delta at round-size-matched width:
-                # its consumers (counts collect, enqueue select, pending
-                # write) are all thin per-row work, and 64 splinter
-                # blocks/files per small round cost more in task launches
-                # than the data
-                return ranked_df.coalesce(n_view).localCheckpoint()
-
-            lo, hi = progress["pending_seq_range"]
-            disc_fut = writes.submit(disc_build, lo, hi)
-        _t_plan = time.time()
-
-        # One job: outcome counts (progress/retry math). Submitted ASYNC:
-        # nothing in the round
-        # needs the result before meta-build time — the drain check subsumes
-        # `done >= limit` (done counts admitted rows, which are capped by
-        # the enqueue limit, so done can only reach the limit when pending
-        # also empties), capacity uses the driver-known `enqueued`, and the
-        # width_bucket bounds come from pending_seq_range. The job runs
-        # concurrently with the discovery checkpoint and the doc writes
-        # (block-level cache locks make the shared docs materialization
-        # single-compute).
-        def _outcome_job():
-            return (
-                docs_view.groupBy("status", ex["outcome_key"])
-                .agg(*ex["outcome_aggs"])
-                .collect()
-            )
-
-        outcome_fut = writes.submit(_outcome_job)
-        _t_fetch = time.time()
-
+        # One collect of the round's outcome (≤ admitted rows): the fetched,
+        # failed and retry counts and the retry hashes.
+        outcome_fut = writes.submit(
+            docs_view.select("url_hash", "status", ex["outcome_key"]).collect)
 
         # results: persistence gated by scrape_paths (F5) — links still flow;
         # visits: complete per-round visit log (crawl-order golden surface).
@@ -1054,7 +951,12 @@ class CrawlEngine:
         # write targets its own round directory). None of them is awaited in
         # this round: _finalize_prev() awaits + commits them while the NEXT
         # round's compute jobs run (write pipelining).
-        pending_writes = [
+        metrics = (
+            docs.groupBy(ex["metrics_key"], "host")
+            .agg(*ex["metrics_aggs"])
+            .select("*", F.lit(r).alias("round"), ex["job_id"])
+        )
+        doc_writes = [
             writes.submit(
                 self.catalog.append_round,
                 docs_view.where(F.col("should_scrape")).drop("links", "should_scrape"),
@@ -1063,172 +965,73 @@ class CrawlEngine:
                 self.catalog.append_round,
                 docs_view.select(*ex["visits_sel"]),
                 "visits", r),
+            # per-partition lineage/metrics (north rule)
+            writes.submit(self.catalog.append_round, metrics, "metrics", r),
         ]
+        _t_plan = time.time()
 
-        # per-partition lineage/metrics (north rule)
-        metrics = (
-            docs.groupBy(ex["metrics_key"], "host")
-            .agg(*ex["metrics_aggs"])
-            .select("*", F.lit(r).alias("round"), ex["job_id"])
-        )
-        pending_writes.append(
-            writes.submit(self.catalog.append_round, metrics, "metrics", r))
-
-        # --- discover → filter → dedup → enqueue ---------------------------
-        new_rows = None
-        ranked = None
-        n_new = 0
+        # new frontier rows: dense seqs continue the job's enqueue numbering
+        new_rows = FRONTIER_PA_SCHEMA.empty_table()
         if disc_fut is not None:
-            capacity = cfg.limit - enqueued
-            # Buckets whose cumulative offset already exceeds the enqueue
-            # capacity are pruned before the offsets join.
-            ranked = disc_fut.result()
-            _t_ranked = time.time()
-            counts = {row["__bucket"]: row["cnt"] for row in
-                      ranked.groupBy("__bucket").agg(
-                          F.max("__lrn").alias("cnt")).collect()}
-            _t_counts = time.time()
-            total = sum(counts.values())
-            offsets, acc = [], 0
-            for b in sorted(counts):
-                offsets.append((b, acc))
-                acc += counts[b]
-            # bucket→offset as a literal map expression, not a broadcast
-            # join of a createDataFrame frame: local Python rows make a
-            # pickled RDD whose broadcast build re-ran Python workers in
-            # every job that touched new_rows, each round. element_at on a
-            # literal map is pure codegen; a bucket pruned by the capacity
-            # check is absent from the map → null → filtered, exactly the
-            # inner join's semantics. Bucket count is bounded (4×cores), so
-            # the literal stays small at any scale.
-            # one F.expr over a rendered literal string: building the same
-            # map from per-literal F.lit().cast() Column objects cost ~250
-            # py4j round-trips per round on the driver (profiled ~0.24 s)
-            off_items = ",".join(f"{b}L,{o}L" for b, o in offsets
-                                 if o < capacity)
-            off_map = F.expr(f"map({off_items})" if off_items
-                             else "cast(map() as map<bigint,bigint>)")
-            rn = F.col("__off") + F.col("__lrn")
-            new_rows = (
-                ranked.select("*", off_map[F.col("__bucket")].alias("__off"))
-                .where(F.col("__off").isNotNull() & (rn <= capacity))
-                .select(*ex["frontier_head"],
-                        ex["new_depth"],
-                        (F.lit(enqueued) - 1 + rn).alias("seq"),
-                        F.lit(r).alias("round_added"),
-                        ex["new_attempt"])
-            )
-            n_new = min(total, capacity)
-        _t_discover = time.time()
+            found = disc_fut.result()
+            n = found.num_rows
+            new_rows = found.append_column(
+                "seq", pa.array(range(enqueued, enqueued + n), pa.int64())
+            ).append_column(
+                "round_added", pa.array([r] * n, pa.int32())
+            ).append_column(
+                "attempt", pa.array([1] * n, pa.int32())
+            ).cast(FRONTIER_PA_SCHEMA)
+        n_new = new_rows.num_rows
+        _t_disc = time.time()
+        outcome = outcome_fut.result()
+        _t_counts = time.time()
+        n_fetched = sum(1 for row in outcome if row["status"] == 200)
+        n_failed = sum(1 for row in outcome
+                       if row["status"] != 200 and row["final"])
+        # a retry is the admitted row again, one attempt later
+        retries = admitted.filter(pc.is_in(admitted["url_hash"], pa.array(
+            [row["url_hash"] for row in outcome if not row["final"]],
+            pa.string())))
+        retries = retries.set_column(
+            retries.schema.get_field_index("attempt"), "attempt",
+            pc.add(retries["attempt"], 1).cast(pa.int32()))
 
-        # --- next pending + seen/bloom appends -----------------------------
+        # --- next pending + seen/bloom state -------------------------------
         # Finalize the PREVIOUS round here (await its writes — they had this
-        # whole round's compute to overlap with — commit its manifest, free
-        # caches retired two rounds back) before submitting this round's
-        # state writes.
+        # whole round's compute to overlap with — and commit its manifest)
+        # before writing this round's state.
         self._finalize_prev()
-        next_pending = deferred.select(*FRONTIER_COLS)
-        if cfg.max_attempts > 1:
-            retries = (
-                docs.where(~final_attempt)
-                .select("job_id", "url", "url_hash", "host", "depth", "seq",
-                        (F.col("attempt") + 1).alias("attempt"))
-                .join(pending.select("url_hash",
-                                     F.col("origin").alias("__o"),
-                                     F.col("path").alias("__p"),
-                                     F.col("round_added").alias("__ra")),
-                      "url_hash")
-                .select("job_id", "url", "url_hash", "host",
-                        F.col("__o").alias("origin"), F.col("__p").alias("path"),
-                        "depth", "seq", F.col("__ra").alias("round_added"),
-                        "attempt")
-                .select(*FRONTIER_COLS)
-            )
-            next_pending = next_pending.unionByName(retries)
+        frontier = pa.concat_tables([deferred, retries, new_rows])
+        self.catalog.append_round_local(frontier, "pending", r)
         if n_new > 0:
-            if not carry_over:
-                # deferred is the schema-only empty frame here — skip the
-                # union so next round's admitted is the cached new_rows
-                # frame itself (depth-1 lineage for the pipelined pending)
-                next_pending = new_rows
-            else:
-                next_pending = next_pending.unionByName(new_rows)
-        state_writes = [writes.submit(self.catalog.append_round, next_pending, "pending", r)]
-        # In-memory pending for the next round is only safe when its lineage
-        # is one cached frame deep (unlimited budget, no batching, no
-        # retries): with budgets/batches the deferred branch chains through
-        # every prior round's frontier, so cut lineage by waiting for the
-        # parquet write and reading it back (commit still deferred).
-        if carry_over:
-            state_writes[0].result()
-            next_pending = spark.read.schema(FRONTIER_SCHEMA).parquet(
-                self.catalog.round_path("pending", r))
-        if n_new > 0:
-            # The round's new hashes are bounded by the job's enqueue limit:
-            # one collect, then the seen set and the cumulative filter are
-            # updated in memory and written with pyarrow on the driver — no
-            # Spark job for the segment build or either write.
-            self._add_seen(fam, [row["url_hash"] for row in
-                                 new_rows.select("url_hash").collect()])
+            self._add_seen(fam, new_rows["url_hash"].to_pylist())
             self._write_seen(r)
-        # next-pending count by arithmetic over aggregates this round already
-        # computed — no re-read of the just-written files (which cost a
-        # footer-scan Spark job per round):
-        #   pending(r)  = deferred + retries + newly enqueued
-        #   deferred    = pending(r-1) - admitted      (budget/batch split)
-        # pending(r-1) is the prior round's recorded pending_next (the seed
-        # round records it as `enqueued` = seed count).
-        outcome_rows = outcome_fut.result()
-        outcome_counts = {(row["status"], row["final"]): row["count"]
-                          for row in outcome_rows}
-        n_fetched = sum(v for (s_, fin), v in outcome_counts.items()
-                        if s_ == 200)
-        n_failed = sum(v for (s_, fin), v in outcome_counts.items()
-                       if s_ != 200 and fin)
-        n_admitted = sum(outcome_counts.values())
-        n_retries = sum(v for (s_, fin), v in outcome_counts.items()
-                        if s_ != 200 and not fin)
-        n_pending_next = (known_pending - n_admitted) + n_retries + n_new
         _t_writes = time.time()
 
         done = progress["done"] + n_fetched + n_failed
         failed = progress["failed"] + n_failed
-        enqueued_total = enqueued + n_new
-        finalized = n_pending_next == 0 or done >= cfg.limit
-        # Seq range of next round's pending, by arithmetic: new rows carry
-        # seq [enqueued, enqueued + n_new - 1]; deferred/retry rows keep
-        # seqs within the prior range, so the union of ranges covers them.
-        # Drives the next round's width_bucket bounds without waiting for
-        # its outcome job (concurrent discovery materialization).
-        prev_rng = progress["pending_seq_range"]
-        if n_new > 0:
-            rng = [enqueued, enqueued + n_new - 1]
-            if carry_over:
-                rng = [min(prev_rng[0], rng[0]), max(prev_rng[1], rng[1])]
-        else:
-            rng = prev_rng
+        finalized = frontier.num_rows == 0 or done >= cfg.limit
+        seqs = pc.min_max(frontier["seq"]).as_py()
         meta = {
             "round": r, "done": done, "failed": failed,
-            "enqueued": enqueued_total, "finalized": finalized,
+            "enqueued": enqueued + n_new, "finalized": finalized,
             "admitted": n_fetched + n_failed, "new": n_new,
-            "pending_next": n_pending_next, "phase": "crawl",
-            "pending_seq_range": rng,
-            # per-phase wall seconds (lineage/metrics; negligible cost).
-            # Since the round-4 pipelining the outcome (fetch/extract) job
-            # and the discovery checkpoint run CONCURRENTLY, so they share
-            # one "compute" phase — attributing the old fetch_extract /
-            # discover_enqueue split would misread plan-build time as work.
+            "pending_next": frontier.num_rows, "phase": "crawl",
+            "pending_seq_range": ([seqs["min"], seqs["max"]]
+                                  if frontier.num_rows
+                                  else [enqueued + n_new] * 2),
+            # per-phase wall seconds (lineage/metrics; negligible cost):
+            # plan = admission, plan build and job submits; disc = the
+            # wait for the enqueue-cap collect; counts = the further wait
+            # for the outcome collect; compute = all three; state_writes =
+            # the previous round's finalize plus this round's driver writes
             "timings": {
-                "compute": round(_t_discover - _t0, 3),
-                "state_writes": round(_t_writes - _t_discover, 3),
-                # compute sub-phases: plan = driver-side build + submits,
-                # disc = the discovery checkpoint job (docs materialize),
-                # counts = the per-bucket count collect
+                "compute": round(_t_counts - _t0, 3),
+                "state_writes": round(_t_writes - _t_counts, 3),
                 "plan": round(_t_plan - _t0, 3),
-                "disc": round((_t_ranked - _t_plan), 3)
-                if disc_fut is not None else 0.0,
-                "counts": round((_t_counts - _t_ranked), 3)
-                if disc_fut is not None else 0.0,
+                "disc": round(_t_disc - _t_plan, 3),
+                "counts": round(_t_counts - _t_disc, 3),
             },
         }
         tables = ["pending", "results", "visits", "metrics"]
@@ -1242,20 +1045,11 @@ class CrawlEngine:
         # _finalize_prev() during the NEXT round, after the writes complete.
         # A crash before that resumes from the last committed round with
         # this round's directories dropped — exact-resume is unchanged.
-        caches_now = [docs]
-        if limited:
-            caches_now.append(admitted)
         self._prev_inflight = {
-            "round": r, "futures": pending_writes + state_writes,
-            "tables": tables, "meta": meta, "replace": replace,
-            "caches_now": caches_now,
-            # ranked is the localCheckpointed block holder; keeping the
-            # reference until the next finalize stops the ContextCleaner
-            # from reclaiming blocks that in-flight writes still read
-            # (unpersist on a checkpointed frame is a harmless no-op)
-            "caches_later": [ranked] if ranked is not None else [],
+            "round": r, "futures": doc_writes, "tables": tables,
+            "meta": meta, "replace": replace, "docs": docs,
         }
-        self._pending_mem = next_pending
+        self._frontier = frontier
         return meta
 
     # -- reads for callers --------------------------------------------------

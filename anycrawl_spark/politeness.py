@@ -3,14 +3,19 @@
 robots rules, per-domain politeness budgets, explicit salting of skewed
 hosts).
 
-All of this is JVM-side DataFrame code — window functions, broadcast joins,
-and rlike predicates. No Python executes per row.
+The DataFrame code here is JVM-side — window functions, broadcast joins,
+and rlike predicates; no Python executes per row. The one exception is
+``admit_frontier``, the crawl round's admission over its driver-resident
+frontier (at most a job's 50,000 enqueued URLs).
 """
 
 from __future__ import annotations
 
 import re
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 
 # ---------------------------------------------------------------------------
@@ -330,6 +335,41 @@ def apply_host_budget(frontier: DataFrame, budget: int | None,
     admitted = ranked.where(F.col("__host_rank") <= budget).drop("__host_rank")
     deferred = ranked.where(F.col("__host_rank") > budget).drop("__host_rank")
     return admitted, deferred
+
+
+def admit_frontier(frontier: pa.Table, budget: int, batch_size: int = 0,
+                   scope: str = "host") -> tuple[pa.Table, pa.Table]:
+    """Driver-side round admission over a frontier held as a pyarrow table:
+    the rows ``apply_host_budget`` admits (per-host, or per registrable
+    domain with ``scope='domain'``, top-``budget`` by (depth, seq); 0 =
+    unlimited), then the coordinator's batch cut — the first
+    ``batch_size`` of those in seq order (crawlCoordinator.ts:33-38; 0 =
+    all). Returns (admitted, deferred), each in the frontier's row order;
+    together they hold every frontier row exactly once."""
+    n = frontier.num_rows
+    seq = frontier["seq"].to_numpy()
+    keep = np.ones(n, dtype=bool)
+    if budget:
+        hosts = frontier["host"].combine_chunks()
+        if scope == "domain":
+            from anycrawl_spark.kernel.canonical import base_domain_of
+
+            uniq = pc.unique(hosts)
+            domains = pa.array([None if h is None else base_domain_of(h)
+                                for h in uniq.to_pylist()], type=pa.string())
+            hosts = domains.take(pc.index_in(hosts, uniq))
+        key = pc.dictionary_encode(
+            hosts, null_encoding="encode").indices.to_numpy()
+        order = np.lexsort((seq, frontier["depth"].to_numpy(), key))
+        # rank within key: position in the key-sorted order minus the
+        # position of the key's first row
+        ranked = key[order]
+        rank = np.arange(n) - np.searchsorted(ranked, ranked)
+        keep[order[rank >= budget]] = False
+    if batch_size:
+        idx = np.flatnonzero(keep)
+        keep[idx[np.argsort(seq[idx], kind="stable")[batch_size:]]] = False
+    return frontier.filter(pa.array(keep)), frontier.filter(pa.array(~keep))
 
 
 def salt_skewed_hosts(df: DataFrame, host_col: str = "host",

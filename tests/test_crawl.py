@@ -287,6 +287,51 @@ class TestResume:
                 == assert_one_seen_round(spark, full))
 
 
+    def test_resume_from_spark_written_pending(self, spark, small_corpus,
+                                               tmp_root):
+        """Resume reads the committed pending round with pyarrow, whether
+        it is the one-file directory the engine writes or a multi-part one
+        written by Spark (as older checkpoints are). Stopped with deferred
+        and retry rows pending, the resumed crawl equals an uninterrupted
+        run: visits with their attempts, and the seen set."""
+        import glob
+
+        import pyarrow.parquet as pq
+
+        kw = dict(seed_url=SEED, strategy="same-hostname", max_depth=3,
+                  limit=30, politeness_budget=2, batch_size=3,
+                  max_attempts=3, respect_robots=False)
+
+        def visit_log(engine):
+            return sorted((r["seq"], r["attempt"], r["url"], r["depth"],
+                           r["status"], r["round"])
+                          for r in engine.visits().collect())
+
+        full = CrawlEngine(spark, small_corpus,
+                           os.path.join(tmp_root, "spark_pending_full"))
+        full.run(CrawlConfig(job_id="sp", **kw))
+
+        part_dir = os.path.join(tmp_root, "spark_pending_part")
+        part = CrawlEngine(spark, small_corpus, part_dir)
+        part.run(CrawlConfig(job_id="sp", max_rounds=3, **kw))
+        assert part.catalog.last_round() == 3
+        path = part.catalog.round_path("pending", 3)
+        pending = pq.read_table(path)
+        assert any(a > 1 for a in pending["attempt"].to_pylist())   # retry
+        assert any(ra < 3 and a == 1 for ra, a in zip(              # deferred
+            pending["round_added"].to_pylist(),
+            pending["attempt"].to_pylist()))
+        part.catalog.append_round(
+            spark.createDataFrame(pending).repartition(4), "pending", 3)
+        assert len(glob.glob(os.path.join(path, "part-*.parquet"))) == 4
+
+        resumed = CrawlEngine(spark, small_corpus, part_dir)
+        resumed.run(CrawlConfig(job_id="sp", **kw), resume=True)
+        assert visit_log(resumed) == visit_log(full)
+        assert (assert_one_seen_round(spark, resumed)
+                == assert_one_seen_round(spark, full))
+
+
 class TestSeenCompaction:
     def test_compaction_preserves_crawl_and_bounds_dirs(self, spark, small_corpus,
                                                         corpus_dict, tmp_root):
@@ -563,6 +608,74 @@ class TestDomainBudget:
         # site.test domain: only the 2 lowest-seq rows across BOTH subdomains
         assert got == ["https://a.site.test/0", "https://a.site.test/1",
                        "https://other.test/0", "https://other.test/1"]
+
+
+class TestDriverAdmission:
+    """The round admits from its driver-resident frontier with
+    politeness.admit_frontier; apply_host_budget (plus the batch cut the
+    round used to run in Spark) is its DataFrame form. Both must pick the
+    same rows."""
+
+    HOSTS = ["localhost", "intranet",                  # single-label
+             "a.shop.co.uk", "b.shop.co.uk", "shop.co.uk",
+             "x.news.com.au", "news.com.au",           # 2-label public suffix
+             "a.site.test", "b.site.test", "site.test", "other.test"]
+
+    @staticmethod
+    def _frontier(seed: str, n: int = 80):
+        import random
+
+        import pyarrow as pa
+
+        from anycrawl_spark.crawl import FRONTIER_PA_SCHEMA
+
+        rng = random.Random(seed)
+        hosts = [rng.choice(TestDriverAdmission.HOSTS) for _ in range(n)]
+        seqs = rng.sample(range(10 * n), n)
+        return pa.table({
+            "job_id": ["j"] * n,
+            "url": [f"https://{h}/p/{s}" for h, s in zip(hosts, seqs)],
+            "url_hash": [f"{s:064x}" for s in seqs],
+            "host": hosts,
+            "origin": [f"https://{h}" for h in hosts],
+            "path": [f"/p/{s}" for s in seqs],
+            "depth": [rng.randrange(3) for _ in range(n)],   # many ties
+            "seq": seqs,
+            "round_added": [rng.randrange(4) for _ in range(n)],
+            "attempt": [rng.randrange(1, 3) for _ in range(n)],
+        }, schema=FRONTIER_PA_SCHEMA)
+
+    @pytest.mark.parametrize("scope", ["host", "domain"])
+    @pytest.mark.parametrize("salt_n", [0, 4])
+    @pytest.mark.parametrize("budget,batch_size", [(2, 0), (2, 7), (0, 7),
+                                                   (1, 200)])
+    def test_matches_apply_host_budget(self, spark, scope, salt_n, budget,
+                                       batch_size):
+        from anycrawl_spark.politeness import admit_frontier, apply_host_budget
+
+        def rows(t):
+            return sorted(tuple(r.values()) for r in t.to_pylist())
+
+        def df_rows(df):
+            return sorted(tuple(r) for r in df.collect())
+
+        for seed in range(2):
+            table = self._frontier(f"{scope}/{salt_n}/{budget}/"
+                                   f"{batch_size}/{seed}")
+            admitted, deferred = admit_frontier(table, budget, batch_size,
+                                                scope)
+            frontier = spark.createDataFrame(table)
+            want_adm, want_def = apply_host_budget(
+                frontier, budget, order_cols=("depth", "seq"),
+                salt_n=salt_n, scope=scope)
+            if batch_size:
+                want_adm = want_adm.orderBy("seq").limit(batch_size)
+                want_def = frontier.join(want_adm.select("url_hash"),
+                                         "url_hash", "left_anti")
+            cols = table.column_names
+            assert rows(admitted) == df_rows(want_adm.select(*cols))
+            assert rows(deferred) == df_rows(want_def.select(*cols))
+            assert admitted.num_rows + deferred.num_rows == table.num_rows
 
 
 class TestSpecRobotsCrawl:
